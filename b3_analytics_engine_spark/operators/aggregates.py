@@ -80,11 +80,6 @@ def corr_matrix(df: DataFrame, cols: list[str], round_to: int | None = None) -> 
     )
 
 
-def is_empty(df: DataFrame) -> bool:
-    """Empty-frame guard (A8, reference include/tasks/batch_ingestion.py:30)."""
-    return df.isEmpty()
-
-
 def partial_aggregates(
     df: DataFrame, keys: list[str], value_col: str
 ) -> DataFrame:

@@ -54,7 +54,7 @@ def materialize(df: DataFrame) -> DataFrame:
     Use as a postfix transform:  ``df.transform(materialize)``.
 
     Long-lived sessions must unpersist between pipeline runs —
-    ``bench.py``'s ``_unpersist_all`` (persisted RDDs +
+    ``bench.unpersist_all`` (persisted RDDs +
     ``spark.catalog.clearCache()``) is the model.
     """
     return df.persist(_storage_level())

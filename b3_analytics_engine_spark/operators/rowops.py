@@ -38,11 +38,6 @@ def drop_null(df: DataFrame, subset: list[str]) -> DataFrame:
     return df.na.drop(subset=subset)
 
 
-def fill_null(df: DataFrame, value, subset: list[str]) -> DataFrame:
-    """``fillna(0)`` on metric columns (reference include/tasks/data_warehouse.py:24-25)."""
-    return df.na.fill(value, subset=subset)
-
-
 def falsy_guarded_diff(a: str, b: str) -> Column:
     """``close - open`` but 0 when either operand is falsy (None or 0) —
     the reference's change_day guard
@@ -71,12 +66,6 @@ def to_sao_paulo(ts: str) -> Column:
     .tz_convert('America/Sao_Paulo')). Session TZ is pinned UTC, so
     ``from_utc_timestamp`` reproduces the wall-clock shift."""
     return F.from_utc_timestamp(F.col(ts), "America/Sao_Paulo")
-
-
-def coalesce_default(col: str, default=0) -> Column:
-    """dict ``.get(key, 0)`` missing-value default
-    (reference include/tasks/data_processing.py:66-79)."""
-    return F.coalesce(F.col(col), F.lit(default))
 
 
 def snapshot_diff(

@@ -112,28 +112,6 @@ def _hyperplanes(dim: int, bits: int, table: int, seed: int = 42) -> list[list[f
     return planes
 
 
-def rhp_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane signature: bit i = sign(v · h_i).
-
-    Pure-SQL form — fine for a handful of planes. For the bucketing
-    hot path use :func:`rhp_buckets_udf` (one Arrow-vectorized numpy
-    matmul for ALL tables × bits — interpreted higher-order-function
-    folds are ~100× slower per row).
-    """
-    bits = []
-    for i, h in enumerate(planes):
-        hv = F.array(*[F.lit(x) for x in h])
-        bits.append(
-            F.when(dot(vec, hv) >= 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    sig = F.lit(0).cast("long")
-    for b in bits:
-        sig = sig.bitwiseOR(b)
-    return sig
-
-
 def rhp_buckets_udf(planes_by_table: list[list[list[float]]]):
     """Arrow-vectorized bucket assignment: returns a pandas UDF mapping
     an embedding column → array<long> of per-table bucket ids.

@@ -15,7 +15,7 @@ reference's O(history)-per-minute single-process recompute
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -92,31 +92,3 @@ def cumulative_return(
     return df.withColumn(
         out, F.when(F.col(return_col).isNull(), F.lit(None)).otherwise(running)
     )
-
-
-def row_number_per_key(
-    df: DataFrame,
-    key: str | list[str],
-    order: Column | list[Column],
-    out: str = "rn",
-) -> DataFrame:
-    """row_number over (key, order) — building block for keep-last dedup
-    (A1), latest-per-key snapshots (A2), and top-k per group."""
-    keys = [key] if isinstance(key, str) else key
-    orders = order if isinstance(order, list) else [order]
-    return df.withColumn(
-        out, F.row_number().over(Window.partitionBy(*keys).orderBy(*orders))
-    )
-
-
-def rolling_sum(
-    df: DataFrame,
-    value_col: str,
-    key: str | list[str],
-    order: str | list[str],
-    n: int,
-    out: str,
-) -> DataFrame:
-    """Rolling sum sibling of :func:`rolling_mean` (same frame rules)."""
-    w = _ordered_window(key, order).rowsBetween(-(n - 1), 0)
-    return df.withColumn(out, F.sum(value_col).over(w))

@@ -69,9 +69,10 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        # overwrite only the partitions present in the written frame —
-        # the bounded-re-statement behavior the warehouse merge (T5)
-        # relies on at scale (sinks/files.overwrite_warehouse)
+        # a partitioned overwrite replaces only the partitions present
+        # in the written frame (sinks/files.overwrite_warehouse). The
+        # E2 warehouse merge does not use it: start_incremental stages
+        # the whole merged window and swaps the directory
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
     )
     for k, v in (extra_conf or {}).items():

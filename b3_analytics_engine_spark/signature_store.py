@@ -2219,7 +2219,7 @@ class SignatureStore:
         O(new_total / n_centroids) no matter how well the quantizer is
         placed, so probe cost only returns to target by growing the
         cell count itself (the drift A/B's "retrain + rescale" story,
-        `tools/retrain_ab.py` phase 3 — previously a hand-rolled
+        `git show 51ee644:tools/retrain_ab.py` phase 3 — previously a hand-rolled
         sibling corpus, now first-class).
 
         Same sourcing contract as the retrain: NO source-lake re-read,
@@ -2281,7 +2281,7 @@ class SignatureStore:
         covers a ``n_centroids/new_n_centroids`` smaller corpus
         fraction. For the uniform-growth case the occupancy gate
         targets, measured recall@5 at nprobe=1 HELD through a 16→96
-        rescale (`tools/growth_ab.py`): in-distribution queries'
+        rescale (`git show 51ee644:tools/growth_ab.py`): in-distribution queries'
         neighbors co-locate with them under the finer quantizer too.
         Recall-sensitive consumers should still scale nprobe with the
         cell count (hold nprobe/cells constant); the rescale keeps

@@ -255,15 +255,6 @@ def render_dashboard(
     )
 
 
-def write_dashboard_html(
-    warehouse: DataFrame, path: str, max_points: int = 200
-) -> str:
-    html = render_dashboard(warehouse, max_points=max_points)
-    with open(path, "w", encoding="utf-8") as fh:
-        fh.write(html)
-    return path
-
-
 # ------------------------------------------------- report charts
 # The reference's second rendering surface beside the dashboard: the
 # report generator (reference include/tasks/generate_dashboard.py:37-60)

@@ -51,9 +51,12 @@ def write_json_zone(
 def overwrite_warehouse(df: DataFrame, path: str, partition_cols: list[str] | None = None) -> None:
     """K3 analog for the Parquet warehouse: full overwrite of the
     table (the reference drops + recreates the Postgres table per
-    minute). With ``partitionOverwriteMode=dynamic`` set on the
-    session, only partitions present in ``df`` are replaced — the
-    bounded-re-statement behavior T5 needs at scale."""
+    minute). With ``partition_cols`` and the session's
+    ``partitionOverwriteMode=dynamic``, only partitions present in
+    ``df`` are replaced. The streaming merge
+    (``streaming.pipeline.start_incremental``) does not call this: it
+    stages the whole merged window and swaps it in with
+    :func:`replace_directory`."""
     w = df.write.mode("overwrite")
     if partition_cols:
         w = w.partitionBy(*partition_cols)

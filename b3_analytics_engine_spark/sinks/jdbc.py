@@ -1,8 +1,8 @@
 """JDBC sinks (K3 full-replace, K4 upsert-ignore).
 
-No JDBC driver jar in this environment — writers are constructed but
-the merge LOGIC (the part with semantics) is a pure DataFrame
-transform, tested on fixtures.
+``write_replace`` is tested end to end against embedded in-memory
+Derby (its jars ship with pyspark); the merge LOGIC (the part with
+semantics) is a pure DataFrame transform, tested on fixtures.
 """
 
 from __future__ import annotations

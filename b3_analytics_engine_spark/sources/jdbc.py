@@ -15,9 +15,10 @@ does the filtering (JDBC pushdown), and big scans can be split across
 executors with partitionColumn/num_partitions — the reference reads
 everything single-threaded.
 
-No JDBC driver jar ships in this environment; builders construct
-readers without connecting, and tests exercise the watermark logic
-with a fixture-backed ``read_fn``.
+The tests run these readers end to end against embedded in-memory
+Derby (its jars ship with pyspark), and exercise the watermark logic
+alone with a fixture-backed ``read_fn``. The subquery alias is a
+plain SQL identifier: Derby rejects one that starts with ``_``.
 """
 
 from __future__ import annotations
@@ -84,7 +85,7 @@ def incremental_query(table: str, ts_col: str, last_ts: str) -> str:
         )
     return (
         f"(SELECT * FROM {table} "
-        f"WHERE {ts_col} > '{last_ts}' ) AS _incr"
+        f"WHERE {ts_col} > '{last_ts}' ) AS incr"
     )
 
 

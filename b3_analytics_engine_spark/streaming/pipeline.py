@@ -17,8 +17,10 @@ Semantics preserved (and made deterministic):
   is a deterministic upsert — replaying a batch is a no-op) but use
   checkpointed offsets, so nothing is re-read.
 - T5: late/corrected rows re-state history inside the bounded window
-  (40 days) only — at 100 TB the merge touches only affected date
-  partitions, never the whole table.
+  (40 days) only. ``start_incremental`` re-reads that whole window on
+  every micro-batch, merges the batch into it, and rewrites the whole
+  warehouse directory (staged write + swap); rows older than the
+  window drop out. A batch therefore costs O(window), not O(batch).
 - T6: the reference conflates event time and processing time
   (``processed_at`` becomes the warehouse ``date``); we keep BOTH
   columns and parameterize the clock for reproducibility.

@@ -101,14 +101,6 @@ def ewma_batch(events: DataFrame, alpha: float = 0.2) -> DataFrame:
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         carry: dict[int, float] = {}
         for pdf in batches:
-            # null keys: the pandas groupby below is dropna=True, so
-            # NaN-key rows would fall out of the ewm result and come
-            # back as NaN-ewma rows through the index-aligned frame
-            # constructor (r16 advice #1 — a silent divergence from
-            # the old per-group loop, which dropped them). Drop them
-            # explicitly to keep the loop's semantics.
-            if pdf["user_id"].isna().any():
-                pdf = pdf[pdf["user_id"].notna()].reset_index(drop=True)
             if pdf.empty:
                 continue
             # one cython groupby-ewm over the whole batch instead of a
@@ -150,8 +142,13 @@ def ewma_batch(events: DataFrame, alpha: float = 0.2) -> DataFrame:
                 }
             )
 
+    # null keys are dropped BEFORE the Arrow hand-off, keeping the old
+    # per-group loop's semantics: a null in a batch turns user_id into
+    # float64, which merges ids >= 2**53 (2**53 and 2**53 + 1 are one
+    # float) in the carry dict and the output
     return (
         events.select("user_id", "ts", "value")
+        .filter(F.col("user_id").isNotNull())
         .repartition("user_id")
         .sortWithinPartitions("user_id", "ts")
         .mapInPandas(fn, schema=EWMA_OUTPUT)

@@ -127,13 +127,3 @@ def load_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = FIXTURE_TABLES
 ) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = FIXTURE_TABLES
-) -> dict[str, DataFrame]:
-    """Register each table as a temp view (for spark.sql-based queries)."""
-    dfs = load_tables(spark, sf_dir, names)
-    for n, df in dfs.items():
-        df.createOrReplaceTempView(n)
-    return dfs

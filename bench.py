@@ -9,6 +9,10 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 Each query is forced end-to-end with the noop writer (full execution,
 no driver-side collect cost). One warmup action runs first so JVM/codegen
 startup isn't attributed to the first query.
+
+This module is also the measurement core the scripts in ``tools/``
+import: ``session()``, ``query_map()``, ``unpersist_all()`` and the
+``run_noop()`` / ``time_query()`` timer.
 """
 
 from __future__ import annotations
@@ -18,12 +22,15 @@ import os
 import re
 import sys
 import time
+from typing import NamedTuple
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from b3_analytics_engine_spark.session import default_parallelism  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+CPUS = default_parallelism()
 
 # Headline queries: one per workload family (scan+agg, multi-join,
 # window suite, snapshot join, event-time windows, dedup, similarity).
@@ -161,11 +168,33 @@ def sf_from_dir(path: str) -> float:
     return float(m.group(1)) if m else -1.0
 
 
+_ARTIFACT_NAME = re.compile(r"_r(\d+)(?:_c(\d+))?\.json$")
+
+
 def _artifact_round(path: str) -> int:
-    """Round number from a BENCH_r{N}.json / bench_local_r{N}.json
-    filename (0 if the name carries none)."""
-    m = re.search(r"_r(\d+)\.json$", os.path.basename(path))
+    """Round number from a BENCH_r{N}[_c{cpus}].json /
+    bench_local_r{N}[_c{cpus}].json filename (0 if the name carries
+    none)."""
+    m = _ARTIFACT_NAME.search(os.path.basename(path))
     return int(m.group(1)) if m else 0
+
+
+def _artifact_key(path: str, hist: dict) -> tuple:
+    """``(sf, cpus)`` an artifact was recorded at: its own ``sf`` and
+    ``cpus`` fields, else the ``_c{cpus}`` filename suffix; ``None``
+    where neither says."""
+    m = _ARTIFACT_NAME.search(os.path.basename(path))
+    cpus = hist.get("cpus")
+    if cpus is None and m and m.group(2):
+        cpus = int(m.group(2))
+    return hist.get("sf"), cpus
+
+
+def local_artifact_path(round_: int, cpus: int, repo: str = REPO) -> str:
+    """Where a run writes its complete result: the core count is in
+    the name, so runs on boxes of different sizes in the same round
+    never overwrite each other."""
+    return os.path.join(repo, f"bench_local_r{round_:02d}_c{cpus}.json")
 
 
 def _extract_timings(hist: object, headline: set) -> dict[str, float]:
@@ -188,11 +217,13 @@ def _extract_timings(hist: object, headline: set) -> dict[str, float]:
         # printed BEFORE `queries`; cold times share the headline
         # names, so a tail that happens to include part of the cold
         # map would poison `prev` with cold values. The tail is a
-        # stdout SUFFIX, so if the '"queries":' marker survives, the
-        # steady map starts there — parse from it; if it does not,
-        # the tail begins inside (or after) the steady map and every
-        # pair is already steady.
-        marker = blob.find('"queries":')
+        # stdout SUFFIX, so if the '"queries": {' marker survives, the
+        # steady map starts at its LAST occurrence — parse from it; if
+        # it does not, the tail begins inside (or after) the steady
+        # map and every pair is already steady. The brace anchors the
+        # marker: a later line with a scalar '"queries":' field must
+        # not cut away the steady pairs before it.
+        marker = blob.rfind('"queries": {')
         if marker >= 0:
             blob = blob[marker:]
         for q, s in re.findall(
@@ -205,11 +236,17 @@ def _extract_timings(hist: object, headline: set) -> dict[str, float]:
     return found
 
 
-def load_bench_history(repo: str = REPO) -> tuple[dict, dict]:
+def load_bench_history(
+    repo: str = REPO, sf: float | None = None, cpus: int | None = None
+) -> tuple[dict, dict]:
     """Per-query ``(floors, prev)`` from the committed bench
-    artifacts: ``floors[q]`` = cheapest this query EVER ran on any
-    recorded box, ``prev[q]`` = its value in the LATEST round that
-    recorded it.
+    artifacts: ``floors[q]`` = cheapest this query EVER ran,
+    ``prev[q]`` = its value in the LATEST round that recorded it.
+
+    ``sf`` / ``cpus`` key the history: when given, only artifacts
+    recorded at that scale factor / core count count (an artifact that
+    does not say is skipped), so an 8-core run never sets the floors
+    of a 32-core one. ``None`` takes every artifact.
 
     Two artifact families, merged per round with the LOCAL one
     winning:
@@ -234,22 +271,28 @@ def load_bench_history(repo: str = REPO) -> tuple[dict, dict]:
     import glob
 
     headline = set(HEADLINE)
+
+    def artifacts(pattern):
+        for path in sorted(glob.glob(os.path.join(repo, pattern))):
+            try:
+                with open(path) as fh:
+                    hist = json.load(fh)
+            except (OSError, ValueError):
+                continue
+            if not isinstance(hist, dict):
+                continue
+            a_sf, a_cpus = _artifact_key(path, hist)
+            if sf is not None and a_sf != sf:
+                continue
+            if cpus is not None and a_cpus != cpus:
+                continue
+            yield path, hist
+
     per_round: dict[int, dict[str, float]] = {}
-    for path in glob.glob(os.path.join(repo, "BENCH_r*.json")):
-        try:
-            with open(path) as fh:
-                hist = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        n = _artifact_round(path)
-        merged = per_round.setdefault(n, {})
+    for path, hist in artifacts("BENCH_r*.json"):
+        merged = per_round.setdefault(_artifact_round(path), {})
         merged.update(_extract_timings(hist, headline))
-    for path in glob.glob(os.path.join(repo, "bench_local_r*.json")):
-        try:
-            with open(path) as fh:
-                hist = json.load(fh)
-        except (OSError, ValueError):
-            continue
+    for path, hist in artifacts("bench_local_r*.json"):
         found = _extract_timings(hist, headline)
         if found:
             # the local artifact supersedes the truncated tail on
@@ -322,7 +365,41 @@ def adjudicate_timing(
     return sec, entry, sec > bound
 
 
-def _unpersist_all(spark) -> None:
+#: the four bench-only callables in HEADLINE: the raw ANN operators
+#: and the two end-to-end pipelines (none is a registered query)
+BENCH_ONLY = (
+    "cosine_ann_lsh_raw",
+    "cosine_ann_ivf_raw",
+    "corpus_dedup_pipeline",
+    "media_curation_pipeline",
+)
+#: machine-state control query (see main)
+CONTROL = "dedup_exact"
+#: steady runs per timed query; the reported time is their minimum
+STEADY_RUNS = 2
+
+
+def session(app_name: str = "b3-bench"):
+    """The engine session on ``local[CPUS]`` with one shuffle
+    partition per core."""
+    from b3_analytics_engine_spark.session import get_spark
+
+    return get_spark(
+        app_name=app_name, master=f"local[{CPUS}]", shuffle_partitions=CPUS
+    )
+
+
+def query_map() -> dict:
+    """Every registered query's callable, in registry order, plus the
+    BENCH_ONLY callables."""
+    from b3_analytics_engine_spark.queries import llmdata, spark_queries
+
+    qs = spark_queries()
+    qs.update((name, getattr(llmdata, name)) for name in BENCH_ONLY)
+    return qs
+
+
+def unpersist_all(spark) -> None:
     """Drop frames materialized inside operators: persisted
     DataFrames (operators.common.materialize) via the catalog cache,
     plus RDDs from the two remaining localCheckpoint sites.
@@ -338,48 +415,41 @@ def _unpersist_all(spark) -> None:
         rdd.unpersist()
 
 
+def run_noop(spark, fn) -> float:
+    """Wall seconds to build ``fn``'s frame over SF_DIR and force it
+    end-to-end through the noop sink."""
+    t0 = time.perf_counter()
+    fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
+class Timing(NamedTuple):
+    steady: float  # min of STEADY_RUNS runs after the cold one
+    cold: float  # the first run: codegen/JIT + any persist() it plants
+
+
+def time_query(spark, name: str, fn) -> Timing:
+    """One cold noop write, then the minimum of STEADY_RUNS steady ones.
+
+    The cold run is timed too: the steady runs read warm caches for
+    materialize()d frames, so the cold run's wall time is the only
+    per-query COLD number. Its jobs run in job group
+    ``<name>:cold`` and the steady runs' in ``<name>:steady``, so a
+    caller can count them with the status tracker."""
+    sc = spark.sparkContext
+    sc.setJobGroup(f"{name}:cold", name)
+    cold = run_noop(spark, fn)
+    sc.setJobGroup(f"{name}:steady", name)
+    steady = min(run_noop(spark, fn) for _ in range(STEADY_RUNS))
+    return Timing(round(steady, 3), round(cold, 3))
+
+
 def main() -> None:
-    from b3_analytics_engine_spark.session import get_spark
-    from b3_analytics_engine_spark.queries import spark_queries
-
-    from b3_analytics_engine_spark.queries.llmdata import (
-        corpus_dedup_pipeline,
-        cosine_ann_ivf_raw,
-        cosine_ann_lsh_raw,
-        media_curation_pipeline,
-    )
-
-    spark = get_spark(
-        app_name="b3-bench",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=CPUS,
-    )
-    qs = spark_queries()
-    qs["cosine_ann_lsh_raw"] = cosine_ann_lsh_raw
-    qs["cosine_ann_ivf_raw"] = cosine_ann_ivf_raw
-    qs["corpus_dedup_pipeline"] = corpus_dedup_pipeline
-    qs["media_curation_pipeline"] = media_curation_pipeline
+    spark = session()
+    qs = query_map()
 
     # warmup: JVM + parquet footer caches
     spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet")).count()
-
-    def time_query(fn) -> tuple[float, float]:
-        # the warmup run (codegen/JIT + any persist() the query plants)
-        # is now ALSO timed (r16 verdict item 1: the min-of-2 steady
-        # protocol reads warm caches for materialize()d frames, so the
-        # warmup's wall time is the only per-query COLD number), then
-        # min-of-2 timed runs = steady state. `queries` keeps the
-        # steady value exactly as before; the cold time is emitted
-        # additively as `queries_first`.
-        t0 = time.perf_counter()
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        first = time.perf_counter() - t0
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 3), round(first, 3)
 
     # machine-state control: one pinned, never-changing query timed
     # FIRST with the same protocol. This box's throughput swings
@@ -396,12 +466,17 @@ def main() -> None:
     # once at the end) into control_series: any consumer can detect a
     # mid-run machine-state shift instead of mistaking it for a code
     # regression. control_sec stays the first sample (back-compat).
-    CONTROL = "dedup_exact"
     CONTROL_EVERY = 15
-    control_series: list[float] = [time_query(qs[CONTROL])[0]]
-    _unpersist_all(spark)
 
-    floors, prev = load_bench_history()
+    def control() -> float:
+        sec = time_query(spark, CONTROL, qs[CONTROL]).steady
+        unpersist_all(spark)
+        return sec
+
+    control_series: list[float] = [control()]
+
+    # history keyed by (sf, cpus): another box's timings are no bound
+    floors, prev = load_bench_history(sf=sf_from_dir(SF_DIR), cpus=CPUS)
 
     timings: dict[str, float] = {}
     first_timings: dict[str, float] = {}
@@ -411,10 +486,10 @@ def main() -> None:
         fn = qs[name]
 
         def retime():
-            _unpersist_all(spark)
-            return time_query(fn)[0]
+            unpersist_all(spark)
+            return time_query(spark, name, fn).steady
 
-        steady, first = time_query(fn)
+        steady, first = time_query(spark, name, fn)
         # the first observed cold run is the genuine start-of-query
         # state; retimes re-run cold too but their purpose is steady
         # adjudication, so queries_first keeps this one
@@ -431,12 +506,11 @@ def main() -> None:
         # between timed runs overlaps block removal with the next
         # measurement; dropping after keeps executor memory flat across
         # the suite without touching any timed section
-        _unpersist_all(spark)
+        unpersist_all(spark)
         if (pos + 1) % CONTROL_EVERY == 0:
-            control_series.append(time_query(qs[CONTROL])[0])
-            _unpersist_all(spark)
+            control_series.append(control())
 
-    control_series.append(time_query(qs[CONTROL])[0])
+    control_series.append(control())
     control_series = [round(c, 3) for c in control_series]
     control_sec = control_series[0]
     # max/min over the series EXCLUDING the first sample (which is
@@ -493,7 +567,7 @@ def main() -> None:
     # become a floor); last run of the round wins, which matches the
     # driver's own run being the final one before the artifact lands.
     if sf_from_dir(SF_DIR) == 0.1:
-        local = os.path.join(REPO, f"bench_local_r{next_round():02d}.json")
+        local = local_artifact_path(next_round(), CPUS)
         try:
             with open(local, "w") as fh:
                 json.dump(result, fh, indent=1)

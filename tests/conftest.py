@@ -33,7 +33,7 @@ def _cache_hygiene():
     known sizes flip SMJ→BHJ and InMemoryTableScan replaces the
     parquet scan, which broke the cross-scale plan-shape test when
     it ran after the llmdata suite. Same hygiene bench.py's
-    `_unpersist_all` applies between queries. Uses the active
+    `unpersist_all` applies between queries. Uses the active
     session (if any) so pure non-Spark tests don't pay JVM startup.
     """
     yield

@@ -233,3 +233,65 @@ def test_bound_is_tighter_of_prev_and_floor():
     # bound = min(2*1.0, 3*0.2) = 0.6 -> 0.9 triggers a retime
     assert entry is not None and entry["bound"] == 0.6
     assert sec == 0.5 and not flagged
+
+
+def test_artifact_round_parses_core_count_suffix():
+    """A ``_c<N>`` companion artifact belongs to round N's history, not
+    to a round 0 that sorts before every other round."""
+    assert bench._artifact_round("BENCH_r16_c8.json") == 16
+    assert bench._artifact_round("bench_local_r18_c4.json") == 18
+    assert bench._artifact_round("BENCH_r07.json") == 7
+
+
+def test_history_is_keyed_by_sf_and_cpus(tmp_path):
+    """Floors and prev for a run come only from artifacts recorded at
+    its own scale factor and core count: an 8-core companion run must
+    neither lower a 32-core floor nor become a 32-core prev."""
+    q1 = sorted(bench.HEADLINE)[0]
+    _write_wrapper(tmp_path / "BENCH_r01.json", '"queries": {"%s": 0.50}' % q1)
+    # 8-core companion wrapper (same round, faster)
+    (tmp_path / "BENCH_r01_c8.json").write_text(json.dumps(
+        {"n": 1, "cpus": 8, "sf": 0.1, "tail": '"queries": {"%s": 0.20}' % q1}
+    ))
+    # newest round, 8 cores: the core count only in the filename
+    (tmp_path / "bench_local_r02_c8.json").write_text(
+        json.dumps({"sf": 0.1, "queries": {q1: 0.90}})
+    )
+    # another scale factor at 32 cores
+    (tmp_path / "bench_local_r03.json").write_text(
+        json.dumps({"sf": 0.01, "cpus": 32, "queries": {q1: 0.05}})
+    )
+    assert bench.load_bench_history(str(tmp_path), sf=0.1, cpus=32) == (
+        {q1: 0.50}, {q1: 0.50})
+    assert bench.load_bench_history(str(tmp_path), sf=0.1, cpus=8) == (
+        {q1: 0.20}, {q1: 0.90})
+    assert bench.load_bench_history(str(tmp_path), sf=0.1, cpus=4) == ({}, {})
+
+
+def test_local_artifact_name_carries_core_count(tmp_path):
+    """Two boxes benching the same round write two files, and each is
+    read back as that round's history for its own core count only."""
+    q1 = sorted(bench.HEADLINE)[0]
+    paths = {c: bench.local_artifact_path(18, c, repo=str(tmp_path))
+             for c in (4, 8)}
+    assert paths[4] != paths[8]
+    for c, path in paths.items():
+        with open(path, "w") as fh:
+            json.dump({"sf": 0.1, "cpus": c, "queries": {q1: c / 10}}, fh)
+        assert bench._artifact_round(path) == 18
+    for c in (4, 8):
+        floors, prev = bench.load_bench_history(str(tmp_path), 0.1, c)
+        assert floors == prev == {q1: c / 10}
+
+
+def test_tail_marker_ignores_later_scalar_queries_field(tmp_path):
+    """The steady map's marker was truncated away; a later stdout line
+    that carries a scalar '"queries":' field must not cut off the
+    steady pairs printed before it."""
+    q1, q2 = sorted(bench.HEADLINE)[:2]
+    _write_wrapper(
+        tmp_path / "BENCH_r01.json",
+        '"%s": 0.45, "%s": 0.25}}\n{"queries": 84}' % (q1, q2),
+    )
+    floors, _ = bench.load_bench_history(repo=str(tmp_path))
+    assert floors == {q1: 0.45, q2: 0.25}

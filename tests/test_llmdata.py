@@ -1659,8 +1659,8 @@ def test_jpeg_codec_roundtrip_all_modes(spark):
     from b3_analytics_engine_spark.operators.multimodal import (
         _parse_jpeg,
         decode_image_stats,
-        encode_jpeg_baseline,
     )
+    from media_encoders import encode_jpeg_baseline
 
     w, h = 37, 21
     # solid color: DC-only blocks, tightest bound
@@ -1727,8 +1727,8 @@ def test_jpeg_12bit_samples():
 
     import pytest
 
-    from b3_analytics_engine_spark.operators.multimodal import (
-        _parse_jpeg,
+    from b3_analytics_engine_spark.operators.multimodal import _parse_jpeg
+    from media_encoders import (
         encode_jpeg_baseline,
         encode_jpeg_progressive,
     )
@@ -1781,8 +1781,8 @@ def test_jpeg_16bit_quant_tables():
     import random
     import struct
 
-    from b3_analytics_engine_spark.operators.multimodal import (
-        _parse_jpeg,
+    from b3_analytics_engine_spark.operators.multimodal import _parse_jpeg
+    from media_encoders import (
         encode_jpeg_baseline,
         encode_jpeg_progressive,
     )
@@ -1841,10 +1841,8 @@ def test_jpeg_parser_rejects_malformed_valueerror_only():
     overflow, segment length past EOF."""
     import pytest
 
-    from b3_analytics_engine_spark.operators.multimodal import (
-        _parse_jpeg,
-        encode_jpeg_baseline,
-    )
+    from b3_analytics_engine_spark.operators.multimodal import _parse_jpeg
+    from media_encoders import encode_jpeg_baseline
 
     good = encode_jpeg_baseline(16, 16, bytes(16 * 16 * 3), q=16,
                                 restart_interval=1)
@@ -1929,8 +1927,8 @@ def test_progressive_jpeg_decodes_identical_to_baseline():
     reconstruct EXACTLY the same coefficients — byte-identical RGB.
     Covers gray, 4:4:4, 4:2:0, non-multiple-of-8 dims, and restart
     markers inside every progressive scan type."""
-    from b3_analytics_engine_spark.operators.multimodal import (
-        _parse_jpeg,
+    from b3_analytics_engine_spark.operators.multimodal import _parse_jpeg
+    from media_encoders import (
         encode_jpeg_baseline,
         encode_jpeg_progressive,
     )
@@ -1957,10 +1955,8 @@ def test_progressive_jpeg_rejects_malformed_valueerror_only():
     headers violating T.81 G constraints are rejected."""
     import pytest
 
-    from b3_analytics_engine_spark.operators.multimodal import (
-        _parse_jpeg,
-        encode_jpeg_progressive,
-    )
+    from b3_analytics_engine_spark.operators.multimodal import _parse_jpeg
+    from media_encoders import encode_jpeg_progressive
 
     good = encode_jpeg_progressive(16, 16, _grad_rgb(16, 16), q=16)
     w, h, ch, _ = _parse_jpeg(good)
@@ -1995,8 +1991,8 @@ def test_jpeg_truncation_fuzz_exhaustive():
     stream must raise ValueError — no byte boundary escapes the
     quarantine contract. The default gate runs the sampled version;
     this one is the full sweep (`pytest -m soak`)."""
-    from b3_analytics_engine_spark.operators.multimodal import (
-        _parse_jpeg,
+    from b3_analytics_engine_spark.operators.multimodal import _parse_jpeg
+    from media_encoders import (
         encode_jpeg_baseline,
         encode_jpeg_progressive,
     )

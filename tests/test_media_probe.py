@@ -4,8 +4,8 @@ probe_media_metadata (ffprobe-lite) operator.
 Codec scope under test is the documented header-level contract:
 spec-exact frame geometry / SPS field decode / NAL census — never
 audio synthesis or pixel reconstruction (those stay stubbed, honestly).
-Golden inputs come from the module's own writers, whose header fields
-are spec-derived; malformed-input tests pin the ValueError quarantine
+Golden inputs come from the test writers in ``media_encoders.py``,
+whose header fields are spec-derived; malformed-input tests pin the ValueError quarantine
 contract shared by every codec in ``operators/multimodal.py``.
 """
 
@@ -14,13 +14,15 @@ from __future__ import annotations
 import pytest
 
 from b3_analytics_engine_spark.operators.multimodal import (
-    _BitWriter,
     _h264_strip_epb,
     _parse_h264_info,
     _parse_mp3_info,
+    probe_media_metadata,
+)
+from media_encoders import (
+    _BitWriter,
     encode_h264_annexb,
     encode_mp3_stream,
-    probe_media_metadata,
 )
 
 # ------------------------------------------------------------- MP3
@@ -442,8 +444,8 @@ def test_probe_jpeg_is_header_only_but_structurally_strict():
     from b3_analytics_engine_spark.operators.multimodal import (
         _parse_jpeg,
         _probe_jpeg_header,
-        encode_jpeg_baseline,
     )
+    from media_encoders import encode_jpeg_baseline
 
     good = encode_jpeg_baseline(8, 8, bytes(8 * 8 * 3))
     assert _probe_jpeg_header(good) == (8, 8, 3)
@@ -475,8 +477,8 @@ def test_probe_profile_reports_source_channel_layout():
 
     from b3_analytics_engine_spark.operators.multimodal import (
         _probe_one,
-        encode_jpeg_baseline,
     )
+    from media_encoders import encode_jpeg_baseline
 
     def chunk(ctype, body):
         return (

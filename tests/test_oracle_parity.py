@@ -84,7 +84,7 @@ def test_query_matches_oracle(spec, spark, duck_oracle, duck_smoke):
     finally:
         # operators.common.materialize persists multi-consumer frames;
         # 151 queries against one session would otherwise accumulate
-        # cache entries (the same hygiene bench.py's _unpersist_all does)
+        # cache entries (the same hygiene bench.unpersist_all does)
         spark.catalog.clearCache()
 
     res = duck.sql(spec.oracle)

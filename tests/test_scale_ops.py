@@ -108,6 +108,27 @@ def test_ewma_batch_drops_null_keys(spark):
         assert abs(want[(r["user_id"], r["ts"])] - r["ewma"]) < 1e-12
 
 
+def test_ewma_batch_keeps_int64_ids_exact_beside_null_keys(spark):
+    """A null key in the same batch must not leave user_id as float64
+    once the null rows are dropped: 2**53 and 2**53 + 1 are one float,
+    so the two users would merge in the carry dict and the output."""
+    import datetime as dt
+
+    from conftest import local_df
+
+    big = 2**53
+    t = [dt.datetime(2024, 1, 1, 0, m) for m in range(3)]
+    rows = [(big, t[0], 1.0), (big, t[1], 2.0), (big + 1, t[0], 10.0),
+            (big + 1, t[1], 20.0), (big + 1, t[2], 30.0), (None, t[0], 5.0)]
+    ev = local_df(spark, rows, "user_id BIGINT, ts TIMESTAMP, value DOUBLE")
+    got = {(r["user_id"], r["ts"]): r["ewma"]
+           for r in ewma_batch(ev.coalesce(1), alpha=0.5).collect()}
+    assert got == {
+        (big, t[0]): 1.0, (big, t[1]): 1.5,
+        (big + 1, t[0]): 10.0, (big + 1, t[1]): 15.0, (big + 1, t[2]): 22.5,
+    }
+
+
 def test_ivf_ann_recall(spark):
     emb = load_table(spark, ORACLE_SF_DIR, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10).select(

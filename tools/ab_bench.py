@@ -3,13 +3,13 @@
 
 Runs each named query variant N times interleaved (round-robin, not
 back-to-back, so JIT/page-cache drift hits all variants equally),
-reports min-of-N per variant, and always runs the `dedup_exact`
-machine-state control first and last so numbers can be normalized
-against the r5 steady-state (~0.22 s) — the convention every
-ARCHITECTURE.md A/B table uses.
+reports min-of-N per variant, and times the `dedup_exact`
+machine-state control (bench.py's protocol) first and last so numbers
+can be normalized against it — the convention every ARCHITECTURE.md
+A/B table uses.
 
 Usage:
-    python tools/ab_bench.py q1 q2 ...            # registry names
+    python tools/ab_bench.py q1 q2 ...            # query-map names
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python tools/ab_bench.py ...
 """
 
@@ -17,55 +17,35 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+import bench  # noqa: E402
+
 N = int(os.environ.get("AB_ROUNDS", "3"))
 
 
-def _unpersist_all(spark) -> None:
-    # same hygiene bench.py applies between timed queries
-    spark.catalog.clearCache()
-    jsc = spark.sparkContext._jsc
-    for rdd in list(jsc.getPersistentRDDs().values()):
-        rdd.unpersist()
-
-
-def run_once(spark, fn) -> float:
-    t0 = time.perf_counter()
-    fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-    dt = time.perf_counter() - t0
-    _unpersist_all(spark)
-    return dt
-
-
 def main() -> None:
-    from b3_analytics_engine_spark.queries import registry
-    from b3_analytics_engine_spark.session import get_spark
-
     names = sys.argv[1:]
     if not names:
         print("usage: ab_bench.py <query> [query...]", file=sys.stderr)
         sys.exit(2)
-    reg = registry()
-    spark = get_spark(
-        app_name="ab-bench",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=int(CPUS),
-    )
-    control = reg["dedup_exact"].fn
-    ctl0 = min(run_once(spark, control) for _ in range(2))
+    spark = bench.session("ab-bench")
+    qs = bench.query_map()
+
+    def control() -> float:
+        sec = bench.time_query(spark, bench.CONTROL, qs[bench.CONTROL]).steady
+        bench.unpersist_all(spark)
+        return sec
+
+    ctl0 = control()
     times: dict[str, list[float]] = {n: [] for n in names}
     for _ in range(N):
         for n in names:
-            times[n].append(run_once(spark, reg[n].fn))
-    ctl1 = min(run_once(spark, control) for _ in range(2))
-    print(f"control dedup_exact: start {ctl0:.3f}s end {ctl1:.3f}s "
-          f"(r5 steady ~0.22s)")
+            times[n].append(bench.run_noop(spark, qs[n]))
+            bench.unpersist_all(spark)
+    ctl1 = control()
+    print(f"control {bench.CONTROL}: start {ctl0:.3f}s end {ctl1:.3f}s")
     for n in names:
         best = min(times[n])
         print(f"{n:32s} min {best:7.3f}s  runs {['%.3f' % t for t in times[n]]}")

@@ -4,9 +4,9 @@
 Usage: python tools/capture_plans.py <suffix> <query> [query ...]
 
 Writes plans/$PLANS_ROUND/<query>_<suffix>.txt (default r17) for each
-named query (registered queries plus the bench-only raw callables).
-The judge reads these to check plan claims in OPTIMIZATION_r*.md
-against the code.
+named query (bench.py's query map: registered queries plus the
+bench-only callables), so the plan claims in OPTIMIZATION_r*.md can
+be checked against the code.
 """
 
 from __future__ import annotations
@@ -19,7 +19,8 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+import bench  # noqa: E402
+
 OUT = os.path.join(REPO, "plans", os.environ.get("PLANS_ROUND", "r17"))
 
 
@@ -27,29 +28,11 @@ def main() -> None:
     suffix = sys.argv[1]
     names = sys.argv[2:]
     os.makedirs(OUT, exist_ok=True)
-
-    from b3_analytics_engine_spark.session import get_spark
-    from b3_analytics_engine_spark.queries import spark_queries
-    from b3_analytics_engine_spark.queries.llmdata import (
-        corpus_dedup_pipeline,
-        cosine_ann_ivf_raw,
-        cosine_ann_lsh_raw,
-        media_curation_pipeline,
-    )
-
-    spark = get_spark(
-        app_name="capture-plans",
-        master="local[8]",
-        shuffle_partitions=8,
-    )
-    qs = spark_queries()
-    qs["cosine_ann_lsh_raw"] = cosine_ann_lsh_raw
-    qs["cosine_ann_ivf_raw"] = cosine_ann_ivf_raw
-    qs["corpus_dedup_pipeline"] = corpus_dedup_pipeline
-    qs["media_curation_pipeline"] = media_curation_pipeline
+    spark = bench.session("capture-plans")
+    qs = bench.query_map()
 
     for name in names:
-        df = qs[name](spark, SF_DIR)
+        df = qs[name](spark, bench.SF_DIR)
         # public capture (r16 advice #2): df.explain prints from
         # Python, so redirecting stdout avoids the private
         # PythonSQLUtils.explainString hook that moves between Spark
@@ -62,7 +45,7 @@ def main() -> None:
         with open(path, "w") as f:
             f.write(plan)
         print(f"wrote {path} ({len(plan.splitlines())} lines)", flush=True)
-        spark.catalog.clearCache()
+        bench.unpersist_all(spark)
 
 
 if __name__ == "__main__":

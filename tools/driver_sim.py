@@ -12,11 +12,10 @@ from __future__ import annotations
 import datetime
 import hashlib
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-
-import os
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from pyspark.sql import SparkSession
@@ -60,7 +59,8 @@ def value_hash(cols, rows):
 
 
 def main():
-    # stock session — same defaults as the grading driver
+    # stock session, as the __spark_entry__ contract's consumer builds
+    # it — deliberately NOT bench.session()
     spark = (
         SparkSession.builder.master("local[8]")
         .appName("driver-sim")

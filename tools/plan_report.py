@@ -19,6 +19,8 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+import bench  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 # Plan-intent annotations for the bench suite's most expensive
@@ -135,23 +137,9 @@ def main() -> None:
         join_kinds,
         physical_plan,
     )
-    from b3_analytics_engine_spark.queries import registry
-    from b3_analytics_engine_spark.session import get_spark
-    from bench import HEADLINE
 
-    from b3_analytics_engine_spark.queries.llmdata import (
-        corpus_dedup_pipeline,
-        cosine_ann_ivf_raw,
-        cosine_ann_lsh_raw,
-        media_curation_pipeline,
-    )
-
-    spark = get_spark(app_name="plan-report", master="local[8]", shuffle_partitions=8)
-    qs = {n: s.fn for n, s in registry().items()}
-    qs["cosine_ann_lsh_raw"] = cosine_ann_lsh_raw
-    qs["cosine_ann_ivf_raw"] = cosine_ann_ivf_raw
-    qs["corpus_dedup_pipeline"] = corpus_dedup_pipeline
-    qs["media_curation_pipeline"] = media_curation_pipeline
+    spark = bench.session("plan-report")
+    qs = bench.query_map()
 
     lines = [
         "# PLANS — physical-plan audit of the bench headline queries",
@@ -168,7 +156,7 @@ def main() -> None:
         "| query | joins | shuffles | pushdown | notes | plan intent @100x |",
         "|---|---|---|---|---|---|",
     ]
-    for name in HEADLINE:
+    for name in bench.HEADLINE:
         df = qs[name](spark, SF_DIR)
         plan = physical_plan(df)
         kinds = join_kinds(df)
@@ -190,6 +178,9 @@ def main() -> None:
         gw = global_windows(df)
         if gw:
             notes.append("GLOBAL-WINDOW!")
+        # a frame materialize()d by one query would change the NEXT
+        # query's plan (InMemoryTableScan, known sizes flip joins)
+        bench.unpersist_all(spark)
         intent = PLAN_INTENT.get(name, "—")
         lines.append(
             f"| {name} | {joins} | {n_ex} | {pushdown} | "
@@ -198,7 +189,7 @@ def main() -> None:
     out = os.path.join(REPO, "PLANS.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
-    print(f"wrote {out} ({len(HEADLINE)} queries)")
+    print(f"wrote {out} ({len(bench.HEADLINE)} queries)")
 
 
 if __name__ == "__main__":

@@ -2,23 +2,27 @@
 """Per-query cost breakdown for the bench headline set (r16 measure-first
 pass, spark_optimization_guide §1).
 
-For each headline query, reports:
+For each query, times bench.py's protocol (``bench.time_query``) and
+reports:
 
-- build_s  — wall time to CONSTRUCT the DataFrame (analysis on the
-  driver; Catalyst optimization runs at action time, but plan-tree
-  construction + analysis cost lives here),
-- first_s  — the warmup noop write (includes codegen compile, AQE
-  re-planning one-offs AND the compute that populates materialize()'d
-  caches — bench.py's warmup does exactly this),
-- steady_s — min of N noop writes of a FRESHLY REBUILT plan WITHOUT
-  unpersisting between runs (bench.py's exact timed methodology:
-  persisted intermediates from the warmup stay cached, CacheManager
-  matches the rebuilt plan by canonicalized-plan equality),
+- cold_s   — the first noop write, plan construction included
+  (codegen compile, AQE re-planning one-offs AND the compute that
+  populates materialize()'d caches),
+- steady_s — min of bench.STEADY_RUNS noop writes of a FRESHLY REBUILT
+  plan WITHOUT unpersisting between runs (persisted intermediates from
+  the cold run stay cached, CacheManager matches the rebuilt plan by
+  canonicalized-plan equality),
+- build_s  — wall time to CONSTRUCT the DataFrame once more after the
+  steady runs (analysis on the driver; Catalyst optimization runs at
+  action time, but plan-tree construction + analysis cost lives here),
 - njobs    — Spark jobs launched by one steady run (AQE stage
   materializations show up here; a high count at tiny SF is
   driver-latency, not data work).
 
 Usage: python tools/profile_bench.py [query ...]   (default: whole set)
+
+Pointed at the scale fixture of ``tools/scale_spotcheck.py build``
+(``SPARK_GRAFT_SF_DIR=<fixture>``) it is the scale spot check.
 """
 
 from __future__ import annotations
@@ -28,81 +32,41 @@ import os
 import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-N = int(os.environ.get("PROFILE_ROUNDS", "2"))
-
-
-def _unpersist_all(spark) -> None:
-    spark.catalog.clearCache()
-    jsc = spark.sparkContext._jsc
-    for rdd in list(jsc.getPersistentRDDs().values()):
-        rdd.unpersist()
+import bench  # noqa: E402
 
 
 def main() -> None:
-    from bench import HEADLINE
-    from b3_analytics_engine_spark.session import get_spark
-    from b3_analytics_engine_spark.queries import spark_queries
-    from b3_analytics_engine_spark.queries.llmdata import (
-        corpus_dedup_pipeline,
-        cosine_ann_ivf_raw,
-        cosine_ann_lsh_raw,
-        media_curation_pipeline,
-    )
+    spark = bench.session("profile-bench")
+    qs = bench.query_map()
+    names = sys.argv[1:] or bench.HEADLINE
+    spark.read.parquet(os.path.join(bench.SF_DIR, "lineitem.parquet")).count()
 
-    spark = get_spark(
-        app_name="profile-bench",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=int(CPUS),
-    )
-    qs = spark_queries()
-    qs["cosine_ann_lsh_raw"] = cosine_ann_lsh_raw
-    qs["cosine_ann_ivf_raw"] = cosine_ann_ivf_raw
-    qs["corpus_dedup_pipeline"] = corpus_dedup_pipeline
-    qs["media_curation_pipeline"] = media_curation_pipeline
-
-    names = sys.argv[1:] or HEADLINE
-    spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet")).count()
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
+    tracker = spark.sparkContext.statusTracker()
     out = {}
     for name in names:
         fn = qs[name]
+        steady, cold = bench.time_query(spark, name, fn)
+        njobs = len(tracker.getJobIdsForGroup(f"{name}:steady"))
         t0 = time.perf_counter()
-        df = fn(spark, SF_DIR)
+        fn(spark, bench.SF_DIR)
         build = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        first = time.perf_counter() - t0
-        steady = float("inf")
-        njobs = -1
-        for i in range(N):
-            sc.setJobGroup(f"prof-{name}-{i}", name)
-            t0 = time.perf_counter()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            njobs = len(tracker.getJobIdsForGroup(f"prof-{name}-{i}"))
-            sc.setJobGroup("cleanup", "cleanup")
-            steady = min(steady, dt)
-        _unpersist_all(spark)
+        bench.unpersist_all(spark)
         out[name] = {
             "build": round(build, 3),
-            "first": round(first, 3),
-            "steady": round(steady, 3),
-            "njobs": njobs,
+            "cold": cold,
+            "steady": steady,
+            "njobs": njobs // bench.STEADY_RUNS,
         }
         print(
-            f"{name:28s} build={build:6.3f} first={first:6.3f} "
-            f"steady={steady:6.3f} njobs={njobs}",
+            f"{name:28s} build={build:6.3f} cold={cold:6.3f} "
+            f"steady={steady:6.3f} njobs={out[name]['njobs']}",
             flush=True,
         )
     total = round(sum(v["steady"] for v in out.values()), 3)
-    print(json.dumps({"total_steady": total, "queries": out}))
+    print(json.dumps({"total_steady": total, "sf_dir": bench.SF_DIR,
+                      "cpus": bench.CPUS, "queries": out}))
 
 
 if __name__ == "__main__":

@@ -7,29 +7,26 @@ invisible to the bench. This tool builds a deterministic ~Nx fixture
 under /tmp (documents x DOC_REP with per-replica token salting so
 near-dup structure scales linearly instead of quadratically; lineitem/
 orders x REL_REP with offset keys; events x EV_REP with offset users;
-other tables copied), then times the heavy headline queries at 32 and
-8 cores with the bench methodology (noop sink, first + min-of-2
-steady).
+other tables copied). The heavy headline queries (QUERIES) are then
+timed on it with bench.py's protocol by tools/profile_bench.py, once
+per core count:
 
-Usage:
   python tools/scale_spotcheck.py build       # write the fixture
-  python tools/scale_spotcheck.py run <cpus>  # time queries at <cpus>
+  SPARK_GRAFT_SF_DIR=/tmp/scale_fixture SPARK_GRAFT_CPUS=<cpus> \
+      python tools/profile_bench.py <QUERIES>  # build prints the line
 
-Output of `run` is one JSON line per query:
-  {"query": ..., "cpus": ..., "first": ..., "steady": ...}
 Committed artifact: plans/r17/scale_spotcheck.md (hand-assembled table).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import bench  # noqa: E402
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 DST = os.environ.get("SCALE_FIXTURE_DIR", "/tmp/scale_fixture")
@@ -59,9 +56,7 @@ QUERIES = [
 def build() -> None:
     from pyspark.sql import functions as F
 
-    from b3_analytics_engine_spark.session import get_spark
-
-    spark = get_spark(app_name="scale-fixture-build")
+    spark = bench.session("scale-fixture-build")
     os.makedirs(DST, exist_ok=True)
 
     def rep_union(df, n, mutate):
@@ -130,55 +125,11 @@ def build() -> None:
         else:
             shutil.copyfile(srcp, dstp)
     print("fixture written to", DST)
-
-
-def run(cpus: int, names: list[str] | None = None) -> None:
-    from b3_analytics_engine_spark.queries import spark_queries
-    from b3_analytics_engine_spark.queries.llmdata import corpus_dedup_pipeline
-    from b3_analytics_engine_spark.session import get_spark
-
-    spark = get_spark(
-        app_name=f"scale-spotcheck-{cpus}",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-    )
-    qs = spark_queries()
-    qs["corpus_dedup_pipeline"] = corpus_dedup_pipeline
-
-    def unpersist_all():
-        spark.catalog.clearCache()
-        jsc = spark.sparkContext._jsc
-        for rdd in list(jsc.getPersistentRDDs().values()):
-            rdd.unpersist()
-
-    n_steady = int(os.environ.get("SPOTCHECK_STEADY_RUNS", "1"))
-    for name in names or QUERIES:
-        fn = qs[name]
-        spark.sparkContext.setJobDescription(f"spotcheck:{name}")
-        t0 = time.perf_counter()
-        fn(spark, DST).write.format("noop").mode("overwrite").save()
-        first = time.perf_counter() - t0
-        steady = float("inf")
-        for _ in range(n_steady):
-            t0 = time.perf_counter()
-            fn(spark, DST).write.format("noop").mode("overwrite").save()
-            steady = min(steady, time.perf_counter() - t0)
-        unpersist_all()
-        print(
-            json.dumps(
-                {
-                    "query": name,
-                    "cpus": cpus,
-                    "first": round(first, 2),
-                    "steady": round(steady, 2),
-                }
-            ),
-            flush=True,
-        )
+    print(f"time it: SPARK_GRAFT_SF_DIR={DST} SPARK_GRAFT_CPUS=<cpus> "
+          f"python tools/profile_bench.py {' '.join(QUERIES)}")
 
 
 if __name__ == "__main__":
-    if sys.argv[1] == "build":
-        build()
-    else:
-        run(int(sys.argv[2]), sys.argv[3:] or None)
+    if sys.argv[1:] != ["build"]:
+        sys.exit("usage: scale_spotcheck.py build")
+    build()
