@@ -516,7 +516,12 @@ def minhash_lsh_pairs(
     # policy as above: AQE picks the semi strategy from runtime stats.
     # no .distinct() on the build side: left-semi semantics already
     # deduplicate it (r16 advice #3 — the extra aggregation over the
-    # cached candidate set was a redundant plan node)
+    # cached candidate set was a redundant plan node). The cost: the
+    # build side carries one id_b row per candidate PAIR, not per
+    # candidate doc, so a doc that collides with many others fans out.
+    # If AQE broadcasts it, the broadcast scales with the pair count
+    # and can pass the threshold on a skewed near-dup corpus, where
+    # the distinct doc set would have fit.
     pb = (
         posts.join(
             candidates.select(F.col("id_b").alias("id")),

@@ -25,6 +25,21 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap: ``SPARK_GRAFT_DRIVER_MEM`` if set, else the smaller
+    of 16 GB and half the host's RAM (``MemTotal``), so the default
+    never asks for more memory than the box has. 16 GB where the RAM
+    cannot be read."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    try:
+        with open(meminfo) as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "16g"
+    return f"{min(16 * 1024, kb // 2048)}m"
+
+
 def get_spark(
     app_name: str = "b3_analytics_engine_spark",
     master: str | None = None,
@@ -60,7 +75,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         # keep catalog state (bucketed-table metastore, warehouse dir)
         # out of the repo/cwd
         .config("spark.sql.warehouse.dir", "/tmp/b3_spark_warehouse")
@@ -71,8 +86,10 @@ def get_spark(
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # a partitioned overwrite replaces only the partitions present
         # in the written frame (sinks/files.overwrite_warehouse). The
-        # E2 warehouse merge does not use it: start_incremental stages
-        # the whole merged window and swaps the directory
+        # E2 warehouse does not use it: each micro-batch adds one
+        # top-level file, rewrites only the files whose rows change,
+        # and commits them with a `_tail/` of per-symbol state through
+        # a `_staging/_commit` record (sinks/files.commit_table)
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
     )
     for k, v in (extra_conf or {}).items():

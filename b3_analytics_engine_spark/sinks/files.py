@@ -8,6 +8,8 @@ as partition columns so readers get partition PRUNING for free — the
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -54,9 +56,11 @@ def overwrite_warehouse(df: DataFrame, path: str, partition_cols: list[str] | No
     minute). With ``partition_cols`` and the session's
     ``partitionOverwriteMode=dynamic``, only partitions present in
     ``df`` are replaced. The streaming merge
-    (``streaming.pipeline.start_incremental``) does not call this: it
-    stages the whole merged window and swaps it in with
-    :func:`replace_directory`."""
+    (``streaming.pipeline.e2_micro_batch``) does not call this: it
+    stages only the files a batch changes and commits them with
+    :func:`commit_table` — O(batch + touched files) per batch; see
+    ``e2_micro_batch`` for when it rewrites the whole window, and
+    :func:`commit_table` for the ``_tail/`` and commit-record layout."""
     w = df.write.mode("overwrite")
     if partition_cols:
         w = w.partitionBy(*partition_cols)
@@ -224,3 +228,143 @@ def compact_parquet(
 
     replace_directory(spark, tmp, path)
     return int(n_files)
+
+
+# ------------------------------------------------- table-file commits
+#
+# Layout of a table directory committed by :func:`commit_table`:
+#
+#   <path>/<name>.parquet      live data files (top level only)
+#   <path>/_tail/              caller state committed with the data:
+#                              Parquet rows plus the ``_state`` record
+#   <path>/_staging/data/      files of the commit in flight
+#   <path>/_staging/tail/      the next ``_tail/``
+#   <path>/_staging/_commit    the commit record (JSON), written as
+#                              ``_commit.tmp`` and renamed into place,
+#                              so a record that exists is complete
+#
+# Readers must skip ``_``- and ``.``-prefixed paths, as Spark, pyarrow
+# datasets and DuckDB's ``<path>/*.parquet`` glob do.
+
+STAGING = "_staging"
+TAIL = "_tail"
+_STATE = "_state"
+_RECORD = "_commit"
+
+
+def subpath(path: str, *parts: str) -> str:
+    return "/".join([path.rstrip("/"), *parts])
+
+
+def data_files(spark, path: str) -> dict[str, int]:
+    """The live data files of a table directory, name → size in
+    bytes, in name order: its top-level files, less ``_``/``.``-
+    prefixed ones."""
+    _, fs, p = _hadoop_fs(spark, path)
+    if not fs.exists(p):
+        return {}
+    found = {
+        st.getPath().getName(): int(st.getLen())
+        for st in fs.listStatus(p)
+        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+    }
+    return dict(sorted(found.items()))
+
+
+def _read_json(spark, path: str):
+    """The JSON a record file holds, or None if there is none. Records
+    are only ever complete (see :func:`commit_table`), so a read error
+    propagates."""
+    _, fs, p = _hadoop_fs(spark, path)
+    if not fs.exists(p):
+        return None
+    inp = fs.open(p)
+    try:
+        return json.loads(bytes(inp.readAllBytes()).decode("utf-8"))
+    finally:
+        inp.close()
+
+
+def _write_json(spark, path: str, obj) -> None:
+    _, fs, p = _hadoop_fs(spark, path)
+    out = fs.create(p, True)
+    try:
+        out.write(json.dumps(obj, sort_keys=True).encode("utf-8"))
+    finally:
+        out.close()
+
+
+def table_state(spark, path: str):
+    """The ``state`` of the last :func:`commit_table`, or None if the
+    table has no committed ``_tail/``."""
+    return _read_json(spark, subpath(path, TAIL, _STATE))
+
+
+def commit_table(
+    spark, path: str, add: dict[str, str], delete: list[str], state: dict
+) -> None:
+    """Commit what the caller wrote under ``<path>/_staging/``: each
+    data file ``add`` names in ``data/`` becomes the top-level file it
+    maps to, the files named in ``delete`` go, and ``tail/`` (with
+    ``state`` as its ``_state`` record) replaces ``_tail/``.
+
+    The commit point is the rename of ``_staging/_commit.tmp`` to
+    ``_staging/_commit``: before it the stage is discarded, after it
+    the commit is rolled forward (:func:`recover_table`), so a crash at
+    any fs op leaves the pre- or the post-commit table once recovered.
+    The names ``add`` maps to must be new to the table: a roll-forward
+    tells done renames by name.
+
+    Reader-visible window: the record is applied as deletes, then one
+    rename per added file, then the ``_tail`` swap. A reader listing
+    the table between the first delete and the last rename misses rows
+    of the replaced files (or of the batch), and never sees a row
+    twice. A commit that deletes nothing adds its files in one rename
+    each; a one-file append is atomic to readers.
+    """
+    record = {"delete": sorted(delete), "add": sorted(add.items())}
+    _write_json(spark, subpath(path, STAGING, "tail", _STATE), state)
+    tmp = subpath(path, STAGING, _RECORD + ".tmp")
+    _write_json(spark, tmp, record)
+    jvm, fs, _ = _hadoop_fs(spark, path)
+    hp = jvm.org.apache.hadoop.fs.Path
+    if not fs.rename(hp(tmp), hp(subpath(path, STAGING, _RECORD))):
+        raise IOError(f"rename {tmp} failed")
+    _apply_record(spark, path, record)
+
+
+def _apply_record(spark, path: str, record: dict) -> None:
+    """Idempotent: every step checks whether it is already done."""
+    jvm, fs, _ = _hadoop_fs(spark, path)
+    hp = jvm.org.apache.hadoop.fs.Path
+    for name in record["delete"]:
+        q = hp(subpath(path, name))
+        if fs.exists(q):
+            fs.delete(q, False)
+    for src, dst in record["add"]:
+        q, d = hp(subpath(path, STAGING, "data", src)), hp(subpath(path, dst))
+        if fs.exists(q):
+            if not fs.rename(q, d):
+                raise IOError(f"rename {src} -> {dst} failed")
+        elif not fs.exists(d):
+            raise IOError(f"committed file {src} is neither staged nor at {dst}")
+    if fs.exists(hp(subpath(path, STAGING, "tail"))):
+        replace_directory(spark, subpath(path, STAGING, "tail"), subpath(path, TAIL))
+    fs.delete(hp(subpath(path, STAGING)), True)
+
+
+def recover_table(spark, path: str) -> None:
+    """Bring a table directory to a committed state before reading it:
+    restore a directory parked by a crashed :func:`replace_directory`,
+    then roll a committed ``_staging/_commit`` record forward, or drop
+    a stage that never reached its record."""
+    recover_parked_directory(spark, path)
+    jvm, fs, _ = _hadoop_fs(spark, path)
+    stage = jvm.org.apache.hadoop.fs.Path(subpath(path, STAGING))
+    if not fs.exists(stage):
+        return
+    record = _read_json(spark, subpath(path, STAGING, _RECORD))
+    if record is None:
+        fs.delete(stage, True)
+    else:
+        _apply_record(spark, path, record)

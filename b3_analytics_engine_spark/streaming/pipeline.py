@@ -13,14 +13,24 @@ streaming wrapper is a thin trigger/checkpoint shell.
 
 Semantics preserved (and made deterministic):
 - T3: the reference re-reads topics from offset 0 each run and relies
-  on dedup for idempotence. We keep the IDEMPOTENCE (warehouse_merge
-  is a deterministic upsert — replaying a batch is a no-op) but use
-  checkpointed offsets, so nothing is re-read.
+  on dedup for idempotence. We use checkpointed offsets, so nothing is
+  re-read, and keep the idempotence: ``warehouse_merge`` is a
+  deterministic upsert, and :func:`e2_micro_batch` drops a replayed
+  epoch's own rows before re-adding them, so a replay after a crash
+  between the warehouse commit and the checkpoint commit leaves one
+  snapshot per symbol for that epoch even with a later clock.
 - T5: late/corrected rows re-state history inside the bounded window
-  (40 days) only. ``start_incremental`` re-reads that whole window on
-  every micro-batch, merges the batch into it, and rewrites the whole
-  warehouse directory (staged write + swap); rows older than the
-  window drop out. A batch therefore costs O(window), not O(batch).
+  (40 days) only. :func:`e2_micro_batch` commits each micro-batch in
+  O(batch + touched files): the batch's rows become one new data
+  file, their SMAs come from a committed 19-row tail per symbol
+  (``<warehouse>/_tail/``), and only files whose rows change are
+  rewritten: on expiry the oldest date slices (expired rows and the
+  re-stated head rows of each expiring symbol), and on a fold the
+  small appended files at the new end. The whole window is recomputed
+  only when no tail is committed, when a row arrives no newer than the
+  table, or on a replay. Readers skip ``_``-prefixed paths (the tail,
+  the staging area, the commit record); see
+  :func:`..sinks.files.commit_table` for what a reader sees mid-commit.
 - T6: the reference conflates event time and processing time
   (``processed_at`` becomes the warehouse ``date``); we keep BOTH
   columns and parameterize the clock for reproducibility.
@@ -28,13 +38,19 @@ Semantics preserved (and made deterministic):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import datetime as _dt
+import uuid
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.aggregates import keep_last_dedup
 from ..operators.joins import normalize_symbol, snapshot_join, union_history
 from ..operators.rowops import falsy_guarded_diff, turnover_ratio
 from ..operators.windows import rolling_mean
+
+_EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
 
 
 def enrich_quotes(
@@ -152,14 +168,9 @@ def enriched_to_warehouse_rows_audited(
     return quarantine_split(df, checks)
 
 
-def process_micro_batch(
-    tagged_batch: DataFrame,
-    history: DataFrame | None = None,
-    clock: Column | None = None,
-) -> DataFrame:
-    """One E2 micro-batch end-to-end (the foreachBatch body):
-    tagged union of the two feeds → split → enrich → warehouse rows →
-    bounded-history merge. Returns the new warehouse table slice.
+def batch_rows(tagged_batch: DataFrame, clock: Column | None = None) -> DataFrame:
+    """One tagged micro-batch → its warehouse rows (no metrics):
+    split the ``_feed`` union → enrich → warehouse rows.
 
     ``tagged_batch`` columns: ``_feed`` ('brapi'|'yfinance') + the
     union of both feeds' columns (unused side null).
@@ -170,11 +181,301 @@ def process_micro_batch(
     yfin_cols = [f.name for f in YFINANCE_QUOTE.fields]
     brapi = tagged_batch.filter(F.col("_feed") == "brapi").select(*brapi_cols)
     yfin = tagged_batch.filter(F.col("_feed") == "yfinance").select(*yfin_cols)
-    enriched = enrich_quotes(brapi, yfin, clock=clock)
-    new_rows = enriched_to_warehouse_rows(enriched)
+    return enriched_to_warehouse_rows(enrich_quotes(brapi, yfin, clock=clock))
+
+
+def process_micro_batch(
+    tagged_batch: DataFrame,
+    history: DataFrame | None = None,
+    clock: Column | None = None,
+) -> DataFrame:
+    """One E2 micro-batch end-to-end as the reference computes it:
+    :func:`batch_rows` merged into ``history`` with every metric
+    recomputed. Returns the new warehouse table. This is the formula
+    :func:`e2_micro_batch` reproduces while touching only the rows it
+    changes."""
+    new_rows = batch_rows(tagged_batch, clock=clock)
     if history is None:  # first run: empty history with warehouse schema
         history = new_rows.sparkSession.createDataFrame([], new_rows.schema)
     return warehouse_merge(history, new_rows)
+
+
+# SMA-20 over a new row needs the 19 rows before it
+TAIL_ROWS = 19
+# appended files are folded once this many sit at the new end
+FOLD_FILES = 32
+# target size of a rewritten date slice; an appended file this big
+# stays out of later folds
+SLICE_BYTES = 1 << 20
+_METRICS = ["sma_5", "sma_20", "turnover_ratio"]
+
+
+def _us(t) -> int:
+    return (t - _EPOCH) // _dt.timedelta(microseconds=1)
+
+
+def _at(us: int) -> _dt.datetime:
+    return _EPOCH + _dt.timedelta(microseconds=us)
+
+
+def _read(spark, wh: str, names, schema: StructType | None = None) -> DataFrame:
+    """The named files of ``wh``; with ``schema`` given, without the
+    Spark job that infers it."""
+    from ..sinks.files import subpath
+
+    r = spark.read if schema is None else spark.read.schema(schema)
+    return r.parquet(*[subpath(wh, f) for f in names])
+
+
+def _last_rows(df: DataFrame, n: int) -> DataFrame:
+    w = Window.partitionBy("symbol").orderBy(F.col("date").desc())
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= n)
+        .select("symbol", "date", "close")
+    )
+
+
+def _is_replay(spark, wh: str, live, batch_df: DataFrame, state) -> bool:
+    """Whether ``batch_df`` re-runs the last committed epoch: stamped
+    with that epoch's clock, its rows are exactly the table's rows of
+    those symbols at that date (a new stream's epoch of the same id
+    carries other rows)."""
+    then = F.lit(_at(state["now_us"]))
+    mine = batch_rows(batch_df, clock=then)
+    committed = (
+        _read(spark, wh, live)
+        .filter(F.col("date") == then)
+        .join(mine.select("symbol"), "symbol", "left_semi")
+        .select(*mine.columns)
+    )
+    return sorted(mine.collect()) == sorted(committed.collect())
+
+
+def e2_micro_batch(
+    batch_df: DataFrame,
+    epoch_id: int,
+    spark,
+    warehouse_path: str,
+    history_days: int = 40,
+    now=None,
+) -> None:
+    """``foreachBatch`` body of :func:`start_incremental` — one E2
+    micro-batch committed to the warehouse. Exposed at module level so
+    tests and backfills drive it with static frames and an injected
+    clock ``now`` (a datetime, UTC if naive; default: the wall clock).
+
+    The table after the batch equals :func:`process_micro_batch` over
+    the rows dated within ``history_days`` of ``now`` (T5), but the
+    batch touches only the files whose rows change. The committed
+    ``_state`` record keeps the table's schema and a manifest: per data
+    file its oldest and newest date, its size, and whether it holds
+    appended batches.
+
+    - New rows get SMA-5/SMA-20 from the committed tail: the last
+      ``TAIL_ROWS`` ``(symbol, date, close)`` rows per symbol, kept in
+      ``<warehouse>/_tail/`` and committed with the data.
+    - Touched files, rewritten with the batch (one commit, see
+      :func:`..sinks.files.commit_table`):
+      - none, for a plain append: the batch becomes one file;
+      - when the cutoff passes the oldest row, the oldest files, up to
+        a date that every expiring symbol's first ``TAIL_ROWS``
+        surviving rows precede (``min_periods=1`` re-states those head
+        rows; every later row keeps its metrics, whose 20-row frame is
+        unchanged). They are rewritten as date slices of about
+        ``SLICE_BYTES``, so the next expiry touches only the oldest;
+      - once ``FOLD_FILES`` small appended files sit at the new end,
+        those files, merged with the batch into one (a fold, which
+        bounds the file count);
+      - the whole window, with every metric recomputed, when no tail
+        is committed or the manifest does not match the table (a
+        warehouse written by other code), when a new row is not newer
+        than the newest committed one, or when the batch replays the
+        last committed epoch. This is the reference's full rewrite, in
+        Spark's own output layout, whose files each span every date:
+        the first expiry after one rewrites the window into slices.
+
+    Replay (T3): a re-run of the last committed epoch (same id, same
+    rows) first drops that epoch's rows, so the same or a later
+    ``now`` leaves exactly one snapshot per symbol for it.
+    """
+    from ..sinks import files as sink
+
+    now = _dt.datetime.now(_dt.timezone.utc) if now is None else now
+    if now.tzinfo is None:
+        now = now.replace(tzinfo=_dt.timezone.utc)
+    epoch, now_us = int(epoch_id), _us(now)
+    cutoff = now - _dt.timedelta(days=history_days)
+    wh = warehouse_path.rstrip("/")
+    staged_dir = sink.subpath(wh, sink.STAGING, "data")
+
+    # recover before listing: a table parked at __old by a crashed swap
+    # lists as empty, and "no files" means first run, which would
+    # rebuild the warehouse from this one batch
+    sink.recover_table(spark, wh)
+    state = sink.table_state(spark, wh)
+    live = list(sink.data_files(spark, wh))
+    files = None if state is None else state["files"]
+    if files is not None and sorted(files) != live:
+        files = None  # the table changed outside these commits
+    schema = None if files is None else StructType.fromJson(state["schema"])
+    new_rows = batch_rows(batch_df, clock=F.lit(now))
+    cols = new_rows.columns + _METRICS
+
+    replay = (
+        files is not None
+        and state["epoch"] == epoch
+        and bool(live)
+        and _is_replay(spark, wh, live, batch_df, state)
+    )
+    newest = max((v[1] for v in (files or {}).values()), default=None)
+    whole = files is None or replay or (newest is not None and now_us <= newest)
+    expiry: list[str] = []
+    fold: list[str] = []
+
+    if whole:
+        history = None
+        if live:
+            history = _read(spark, wh, live).filter(F.col("date") >= F.lit(cutoff))
+            if replay:  # drop the replayed epoch's own rows first
+                mine = new_rows.select("symbol").withColumn(
+                    "date", F.lit(_at(state["now_us"]))
+                )
+                history = history.join(mine, ["symbol", "date"], "left_anti")
+        out = process_micro_batch(batch_df, history, clock=F.lit(now)).select(*cols)
+    else:
+        tail_dir = sink.subpath(wh, sink.TAIL)
+        old_tail = _read(
+            spark, tail_dir, sink.data_files(spark, tail_dir), _tail_schema(schema)
+        ).filter(F.col("date") >= F.lit(cutoff))
+        both = union_history(
+            old_tail.withColumn("_new", F.lit(False)),
+            new_rows.withColumn("_new", F.lit(True)),
+        )
+        out = calculate_metrics(both).filter("_new").select(*cols)
+        if files and _us(cutoff) > min(v[0] for v in files.values()):
+            expiry = _expiry_files(spark, wh, files, schema, cutoff, old_tail)
+        fold = _fold_run(files, expiry)
+        if fold:
+            out = _read(spark, wh, fold, schema).select(*cols).unionByName(out)
+        out = out.coalesce(1)
+    out.write.mode("overwrite").parquet(staged_dir)
+    if expiry:  # a write of their own: no slice may hold the batch's rows
+        size = sum(files[f][2] for f in expiry)
+        _restated(spark, wh, expiry, schema, cutoff).select(*cols).repartitionByRange(
+            max(1, -(-size // SLICE_BYTES)), "date"
+        ).write.mode("append").parquet(staged_dir)
+
+    staged = sink.data_files(spark, staged_dir)
+    rows = _read(spark, staged_dir, staged, out.schema)
+    if whole or expiry:
+        ranges = {
+            r[0]: (r[1], r[2])
+            for r in rows.groupBy(F.col("_metadata.file_name"))
+            .agg(F.min(F.unix_micros("date")), F.max(F.unix_micros("date")))
+            .collect()
+        }
+    else:  # one file: the folded files and the batch
+        ranges = {n: (min([now_us, *(files[f][0] for f in fold)]), now_us) for n in staged}
+    # restated rows are dated up to the expiry's newest; later ones are appended
+    edge = max((files[f][1] for f in expiry), default=None)
+    prefix = f"epoch-{epoch}-{uuid.uuid4().hex[:8]}"
+    touched = live if whole else expiry + fold
+    manifest = {f: v for f, v in (files or {}).items() if f not in touched}
+    add = {}
+    for k, (n, size) in enumerate(staged.items()):
+        lo, hi = ranges.get(n, (now_us, now_us))  # no rows: an empty batch
+        add[n] = f"{prefix}-{k}.parquet"
+        manifest[add[n]] = [lo, hi, size, int(not whole and (edge is None or lo > edge))]
+
+    # the tail's new rows come from the staged files, not a recompute
+    tail = rows.select("symbol", "date", "close")
+    if not whole:
+        tail = old_tail.unionByName(tail.filter(F.col("date") == F.lit(now)))
+    _last_rows(tail, TAIL_ROWS).coalesce(1).write.mode("overwrite").parquet(
+        sink.subpath(wh, sink.STAGING, "tail")
+    )
+    sink.commit_table(
+        spark,
+        wh,
+        add=add,
+        delete=touched,
+        state={
+            "epoch": epoch,
+            "now_us": now_us,
+            "schema": out.schema.jsonValue(),
+            "files": manifest,
+        },
+    )
+
+
+def _tail_schema(schema: StructType) -> StructType:
+    return StructType([schema[c] for c in ("symbol", "date", "close")])
+
+
+def _expiry_files(
+    spark, wh: str, files: dict, schema: StructType, cutoff, tail: DataFrame
+) -> list[str]:
+    """The oldest files, up to a date that bounds every expired row and
+    every expiring symbol's first ``TAIL_ROWS`` surviving rows (or all
+    of them, if it has fewer; ``tail`` holds a symbol's last surviving
+    rows). Each candidate set holds every row up to its newest date,
+    and only its files' ``symbol`` and ``date`` are scanned."""
+    order = sorted(files, key=lambda f: files[f][0])
+    n = sum(files[f][0] < _us(cutoff) for f in order)
+    # per symbol: expired rows in the set, surviving rows in the set,
+    # surviving tail rows (the tail's rows carry a null _x)
+    tail_rows = tail.select("symbol", F.lit(None).cast("boolean").alias("_x"))
+    while True:
+        hi = max(files[f][1] for f in order[:n])
+        while n < len(order) and files[order[n]][0] <= hi:
+            hi = max(hi, files[order[n]][1])
+            n += 1
+        if n == len(order):
+            return order
+        short = (
+            _read(spark, wh, order[:n], schema)
+            .select("symbol", (F.col("date") < F.lit(cutoff)).alias("_x"))
+            .unionByName(tail_rows)
+            .groupBy("symbol")
+            .agg(
+                F.max("_x").alias("_x"),
+                F.count(F.when(~F.col("_x"), 1)).alias("_s"),
+                F.count(F.when(F.col("_x").isNull(), 1)).alias("_n"),
+            )
+            .filter(F.col("_x") & (F.col("_s") < F.least("_n", F.lit(TAIL_ROWS))))
+        )
+        if short.isEmpty():
+            return order[:n]
+        n = min(len(order), 2 * n)
+
+
+def _fold_run(files: dict, expiry: list[str]) -> list[str]:
+    """The small appended files at the new end, once the batch's own
+    file would make them ``FOLD_FILES``; else none."""
+    run = []
+    for f in sorted(files, key=lambda f: files[f][:2], reverse=True):
+        lo, hi, size, appended = files[f]
+        if not appended or size >= SLICE_BYTES or f in expiry:
+            break
+        run.append(f)
+    return sorted(run) if len(run) >= FOLD_FILES - 1 else []
+
+
+def _restated(spark, wh: str, touched: list[str], schema: StructType, cutoff) -> DataFrame:
+    """The surviving rows of ``touched`` with each symbol's first
+    ``TAIL_ROWS`` rows' SMAs recomputed. ``touched`` holds every row up
+    to its newest date, so those rows' frames hold exactly the rows a
+    full recompute would see; later rows keep their committed metrics."""
+    t = _read(spark, wh, touched, schema).filter(F.col("date") >= F.lit(cutoff))
+    head = F.row_number().over(Window.partitionBy("symbol").orderBy("date")) <= TAIL_ROWS
+    t = rolling_mean(t, "close", "symbol", "date", 5, "_s5")
+    t = rolling_mean(t, "close", "symbol", "date", 20, "_s20")
+    return t.withColumn("_head", head).select(
+        *[c for c in t.columns if c not in ("sma_5", "sma_20", "_s5", "_s20")],
+        F.when(F.col("_head"), F.col("_s5")).otherwise(F.col("sma_5")).alias("sma_5"),
+        F.when(F.col("_head"), F.col("_s20")).otherwise(F.col("sma_20")).alias("sma_20"),
+    )
 
 
 def start_incremental(
@@ -185,49 +486,14 @@ def start_incremental(
     history_days: int = 40,
     trigger: dict | None = None,
 ):
-    """Wire the streaming shell: tagged stream → foreachBatch(E2) →
-    warehouse overwrite. ``trigger`` defaults to availableNow (T2
-    drain-then-stop); pass {"processingTime": "60 seconds"} for the
-    reference's cadence (T1)."""
+    """Wire the streaming shell: tagged stream → foreachBatch
+    (:func:`e2_micro_batch`) → warehouse commit. ``trigger`` defaults
+    to availableNow (T2 drain-then-stop); pass
+    {"processingTime": "60 seconds"} for the reference's cadence
+    (T1)."""
 
     def _run(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        from ..sinks.files import recover_parked_directory, replace_directory
-
-        # An at-least-once retry after a crash BETWEEN the swap's two
-        # renames finds the warehouse path missing with the whole
-        # history parked at __old. Without restoring it first, the
-        # read below answers PATH_NOT_FOUND, the first-run branch
-        # rebuilds the table from this one micro-batch, and the swap
-        # sweeps the parked history as a stale leftover — permanent
-        # loss of the 40-day table.
-        recover_parked_directory(spark, warehouse_path)
-        try:
-            history = spark.read.parquet(warehouse_path).filter(
-                F.col("date")
-                >= F.current_timestamp() - F.expr(f"INTERVAL {history_days} DAYS")
-            )
-        except AnalysisException as e:
-            # Only a genuinely-absent warehouse means first run; any
-            # other read failure (permissions, corrupt footer, partial
-            # directory) must fail the batch — treating it as first run
-            # would silently rebuild the table from one micro-batch and
-            # permanently drop the 40-day history.
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-                raise
-            history = None
-        out = process_micro_batch(batch_df, history)
-        # Stage the merged table next to the live one, then swap. The
-        # old warehouse stays intact until the new copy is fully
-        # committed, so a crash mid-write never destroys the only copy
-        # of the history, and the staged write can read the live
-        # warehouse it is derived from (overwrite-in-place would race
-        # its own input). On the at-least-once retry the swap is
-        # simply redone from a fresh stage — idempotent (T5).
-        staging = warehouse_path.rstrip("/") + "__staging"
-        out.write.mode("overwrite").parquet(staging)
-        replace_directory(spark, staging, warehouse_path)
+        e2_micro_batch(batch_df, epoch_id, spark, warehouse_path, history_days)
 
     writer = stream_df.writeStream.foreachBatch(_run).option(
         "checkpointLocation", checkpoint

@@ -1051,3 +1051,76 @@ def test_append_batch_s3_lease_survives_kill_at_every_op(
         assert not svc._obj, f"lease leaked past recovery at op {k}"
         spark.catalog.clearCache()
         shutil.rmtree(store.root)
+
+
+# ------------------------------------------------------------------
+# The E2 warehouse commit (streaming.pipeline.e2_micro_batch): stage →
+# `_staging/_commit.tmp` renamed to `_commit` → deletes, renames,
+# `_tail` swap → drop the stage. Recovery is the next batch's first step (recover_table).
+# ------------------------------------------------------------------
+
+@pytest.mark.parametrize("kind", ["append", "expiry", "whole"])
+def test_e2_commit_survives_kill_at_every_fs_op(spark, tmp_path, kind):
+    """One micro-batch killed at every fs-op prefix of its commit: a
+    plain append, an expiry rewrite (the cutoff passes the oldest
+    seeded rows) and a first batch's whole-window rewrite (no tail
+    yet). After recovery the table reads exactly as before or after
+    the commit, never torn or duplicated; re-running the batch — a
+    replay of the same epoch when the commit had landed — then gives
+    the never-crashed table."""
+    import datetime as dt
+
+    from test_e2_commit import ALL, T0, _batch, _seed
+
+    from b3_analytics_engine_spark.sinks.files import data_files, recover_table
+    from b3_analytics_engine_spark.streaming.pipeline import e2_micro_batch
+
+    pristine = str(tmp_path / "pristine")
+    _seed(pristine)
+    if kind != "whole":  # commit a tail first
+        b0 = _batch(spark, str(tmp_path / "f0.parquet"), 0, ALL)
+        e2_micro_batch(b0, 0, spark, pristine, now=T0 + dt.timedelta(minutes=1))
+    now = T0 + (dt.timedelta(days=2) if kind == "expiry" else dt.timedelta(minutes=2))
+    batch = _batch(spark, str(tmp_path / "f1.parquet"), 1, ALL)
+
+    def commit(wh):
+        e2_micro_batch(batch, 1, spark, wh, now=now)
+
+    def table(wh):
+        files = [os.path.join(wh, f) for f in data_files(spark, wh)]
+        if not files:
+            return []
+        return sorted(tuple(r) for r in spark.read.parquet(*files).collect())
+
+    def fresh(tag):
+        wh = str(tmp_path / tag)
+        shutil.copytree(pristine, wh)
+        return wh
+
+    pre = table(pristine)
+    wh = fresh("ref")
+    commit(wh)
+    ref = table(wh)
+    assert ref != pre
+
+    state = {"left": None, "ops": []}
+    with _fault_injected(state):
+        commit(fresh("dry"))
+    ops = list(state["ops"])
+    assert "create" in ops and "rename" in ops and len(ops) < 40, ops
+    if kind != "append":  # files replaced: deletes follow the record's rename
+        assert ops[ops.index("rename") + 1] == "delete", ops
+
+    for k in range(len(ops)):
+        wh = fresh(f"k{k}")
+        st = {"left": k, "ops": []}
+        with pytest.raises(_Killed):
+            with _fault_injected(st):
+                commit(wh)
+        recover_table(spark, wh)
+        got = table(wh)
+        assert got in (pre, ref), f"torn table after kill at op {k} ({ops[k]} in {ops})"
+        commit(wh)
+        assert table(wh) == ref, f"diverged after kill at op {k} ({ops[k]} in {ops})"
+        spark.catalog.clearCache()
+        shutil.rmtree(wh)
