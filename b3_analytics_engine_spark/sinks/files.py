@@ -237,17 +237,26 @@ def compact_parquet(
 #   <path>/<name>.parquet      live data files (top level only)
 #   <path>/_tail/              caller state committed with the data:
 #                              Parquet rows plus the ``_state`` record
-#   <path>/_staging/data/      files of the commit in flight
-#   <path>/_staging/tail/      the next ``_tail/``
-#   <path>/_staging/_commit    the commit record (JSON), written as
+#   <path>/_staging/           the commit in flight, as one Spark write
+#                              partitioned by ``STAGE_COL``:
+#     _stage=data/             its data files
+#     _stage=tail/             the next ``_tail/``
+#     _commit                  the commit record (JSON), written as
 #                              ``_commit.tmp`` and renamed into place,
 #                              so a record that exists is complete
 #
+# So an E2 micro-batch writes its rows and its next tail in one job
+# (``streaming.pipeline.e2_micro_batch``), and nothing is renamed
+# before the record. The partition column is not in the files; a
+# writer may also fill either directory with a plain write of its own.
 # Readers must skip ``_``- and ``.``-prefixed paths, as Spark, pyarrow
 # datasets and DuckDB's ``<path>/*.parquet`` glob do.
 
 STAGING = "_staging"
 TAIL = "_tail"
+STAGE_COL = "_stage"
+STAGED_DATA = f"{STAGE_COL}=data"
+STAGED_TAIL = f"{STAGE_COL}=tail"
 _STATE = "_state"
 _RECORD = "_commit"
 
@@ -304,9 +313,10 @@ def commit_table(
     spark, path: str, add: dict[str, str], delete: list[str], state: dict
 ) -> None:
     """Commit what the caller wrote under ``<path>/_staging/``: each
-    data file ``add`` names in ``data/`` becomes the top-level file it
-    maps to, the files named in ``delete`` go, and ``tail/`` (with
-    ``state`` as its ``_state`` record) replaces ``_tail/``.
+    data file ``add`` names in ``_stage=data/`` becomes the top-level
+    file it maps to, the files named in ``delete`` go, and
+    ``_stage=tail/`` (with ``state`` as its ``_state`` record) replaces
+    ``_tail/``.
 
     The commit point is the rename of ``_staging/_commit.tmp`` to
     ``_staging/_commit``: before it the stage is discarded, after it
@@ -323,7 +333,7 @@ def commit_table(
     each; a one-file append is atomic to readers.
     """
     record = {"delete": sorted(delete), "add": sorted(add.items())}
-    _write_json(spark, subpath(path, STAGING, "tail", _STATE), state)
+    _write_json(spark, subpath(path, STAGING, STAGED_TAIL, _STATE), state)
     tmp = subpath(path, STAGING, _RECORD + ".tmp")
     _write_json(spark, tmp, record)
     jvm, fs, _ = _hadoop_fs(spark, path)
@@ -342,14 +352,15 @@ def _apply_record(spark, path: str, record: dict) -> None:
         if fs.exists(q):
             fs.delete(q, False)
     for src, dst in record["add"]:
-        q, d = hp(subpath(path, STAGING, "data", src)), hp(subpath(path, dst))
+        q, d = hp(subpath(path, STAGING, STAGED_DATA, src)), hp(subpath(path, dst))
         if fs.exists(q):
             if not fs.rename(q, d):
                 raise IOError(f"rename {src} -> {dst} failed")
         elif not fs.exists(d):
             raise IOError(f"committed file {src} is neither staged nor at {dst}")
-    if fs.exists(hp(subpath(path, STAGING, "tail"))):
-        replace_directory(spark, subpath(path, STAGING, "tail"), subpath(path, TAIL))
+    staged_tail = subpath(path, STAGING, STAGED_TAIL)
+    if fs.exists(hp(staged_tail)):
+        replace_directory(spark, staged_tail, subpath(path, TAIL))
     fs.delete(hp(subpath(path, STAGING)), True)
 
 

@@ -26,11 +26,17 @@ Semantics preserved (and made deterministic):
   (``<warehouse>/_tail/``), and only files whose rows change are
   rewritten: on expiry the oldest date slices (expired rows and the
   re-stated head rows of each expiring symbol), and on a fold the
-  small appended files at the new end. The whole window is recomputed
-  only when no tail is committed, when a row arrives no newer than the
-  table, or on a replay. Readers skip ``_``-prefixed paths (the tail,
-  the staging area, the commit record); see
-  :func:`..sinks.files.commit_table` for what a reader sees mid-commit.
+  small appended files at the new end. Appends, expiries and folds
+  build the batch from one SQL statement (``_BATCH_SQL``: one
+  ``GROUP BY`` reduces both feeds, one window over tail and new rows
+  gives the SMAs and the next tail) and write its rows and the next
+  tail in one Spark write, partitioned into the stage's data and tail
+  directories; a plain append is three Spark jobs. The whole window is
+  recomputed, with :func:`process_micro_batch`, only when no tail is
+  committed, when a row arrives no newer than the table, or on a
+  replay. Readers skip ``_``-prefixed paths (the tail, the staging
+  area, the commit record); see :func:`..sinks.files.commit_table`
+  for what a reader sees mid-commit.
 - T6: the reference conflates event time and processing time
   (``processed_at`` becomes the warehouse ``date``); we keep BOTH
   columns and parameterize the clock for reproducibility.
@@ -236,6 +242,77 @@ def _last_rows(df: DataFrame, n: int) -> DataFrame:
     )
 
 
+# One non-whole micro-batch in one statement: the rows of {batch} that
+# batch_rows would give, stamped :now, with SMAs from the committed
+# {tail}, each tagged _stage='data'; and the next tail (the last
+# TAIL_ROWS rows per symbol), tagged _stage='tail', of which only
+# symbol, date and close are kept. Both feeds are reduced in one
+# GROUP BY on the join key (brapi's symbol, yfinance's without ".SA"):
+# each max_by sees only its feed's rows, and a symbol missing from a
+# feed gets a null struct, so its row fails the null filter, as the
+# inner join of snapshot_join drops it. The window then runs once over
+# tail and new rows, and one row per output is exploded from it.
+_BATCH_SQL = r"""
+WITH keyed AS (
+  SELECT *, CASE _feed WHEN 'brapi' THEN symbol
+    WHEN 'yfinance' THEN regexp_replace(symbol, '\\.SA$', '') END AS _key
+  FROM {batch}
+), snap AS (
+  SELECT _key AS symbol,
+    max_by(struct(longName, regularMarketPrice, regularMarketChange,
+                  regularMarketChangePercent, marketCap),
+           CASE WHEN _feed = 'brapi' THEN _ingest_ts END) AS b,
+    max_by(struct(open, high, low, close, volume),
+           CASE WHEN _feed = 'yfinance' THEN timestamp END) AS y
+  FROM keyed WHERE _key IS NOT NULL GROUP BY _key
+), new AS (
+  SELECT symbol, :now AS date, try_cast(y.close AS DOUBLE) AS close,
+    struct(b.longName, b.regularMarketPrice, b.regularMarketChange,
+           b.regularMarketChangePercent,
+           try_cast(b.marketCap AS DOUBLE) AS marketCap,
+           y.open, y.high, y.low, try_cast(y.volume AS DOUBLE) AS volume,
+           CASE WHEN y.close IS NULL OR y.close = 0 OR y.open IS NULL
+             OR y.open = 0 THEN 0D ELSE y.close - y.open END AS change_day
+    ) AS q
+  FROM snap
+), both AS (
+  SELECT symbol, date, close, NULL AS q FROM {tail}
+  UNION ALL
+  SELECT * FROM new
+  WHERE close IS NOT NULL AND q.volume IS NOT NULL AND q.marketCap IS NOT NULL
+), metrics AS (
+  SELECT symbol, date, close, q IS NOT NULL AS _new,
+    struct(q.*,
+      avg(close) OVER (PARTITION BY symbol ORDER BY date
+                       ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS sma_5,
+      avg(close) OVER (PARTITION BY symbol ORDER BY date
+                       ROWS BETWEEN 19 PRECEDING AND CURRENT ROW) AS sma_20) AS q,
+    count(*) OVER (PARTITION BY symbol ORDER BY date
+                   ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS _later
+  FROM both
+), tagged AS (
+  SELECT *, IF(_stage = 'data', q, NULL) AS d
+  FROM metrics LATERAL VIEW explode(array_compact(array(
+    IF(_new, 'data', NULL), IF(_later <= {tail_rows}, 'tail', NULL)))) AS _stage
+)
+SELECT symbol, d.longName, d.regularMarketPrice, d.regularMarketChange,
+  d.regularMarketChangePercent, d.marketCap, d.open, d.high, d.low, close,
+  d.volume, d.change_day, date, coalesce(d.sma_5, 0D) AS sma_5,
+  coalesce(d.sma_20, 0D) AS sma_20,
+  coalesce(try_divide(d.volume * close, d.marketCap), 0D) AS turnover_ratio,
+  _stage
+FROM tagged
+"""
+
+
+def _batch_statement(batch_df: DataFrame, tail: DataFrame, now) -> DataFrame:
+    """``_BATCH_SQL`` over ``batch_df`` and the committed ``tail``,
+    in ``batch_df``'s session (``tail`` must come from it too)."""
+    return batch_df.sparkSession.sql(
+        _BATCH_SQL, args={"now": now}, batch=batch_df, tail=tail, tail_rows=TAIL_ROWS
+    )
+
+
 def _is_replay(spark, wh: str, live, batch_df: DataFrame, state) -> bool:
     """Whether ``batch_df`` re-runs the last committed epoch: stamped
     with that epoch's clock, its rows are exactly the table's rows of
@@ -275,15 +352,23 @@ def e2_micro_batch(
     - New rows get SMA-5/SMA-20 from the committed tail: the last
       ``TAIL_ROWS`` ``(symbol, date, close)`` rows per symbol, kept in
       ``<warehouse>/_tail/`` and committed with the data.
-    - Touched files, rewritten with the batch (one commit, see
-      :func:`..sinks.files.commit_table`):
+    - Every batch but a whole rewrite (below) runs one SQL statement
+      (``_BATCH_SQL``) in ``batch_df``'s session (inside
+      ``foreachBatch`` the stream's own, which cannot see the outer
+      session's views): both feeds reduced in one ``GROUP BY``, one
+      window over tail and new rows for the SMAs and the next tail, and
+      one Spark write partitioned into the stage's data and tail
+      directories (:func:`..sinks.files.commit_table`). A plain append
+      is that one write, three Spark jobs.
+    - Touched files, rewritten with the batch (one commit):
       - none, for a plain append: the batch becomes one file;
       - when the cutoff passes the oldest row, the oldest files, up to
         a date that every expiring symbol's first ``TAIL_ROWS``
         surviving rows precede (``min_periods=1`` re-states those head
         rows; every later row keeps its metrics, whose 20-row frame is
         unchanged). They are rewritten as date slices of about
-        ``SLICE_BYTES``, so the next expiry touches only the oldest;
+        ``SLICE_BYTES``, in a write of their own into the stage, so the
+        next expiry touches only the oldest;
       - once ``FOLD_FILES`` small appended files sit at the new end,
         those files, merged with the batch into one (a fold, which
         bounds the file count);
@@ -291,9 +376,10 @@ def e2_micro_batch(
         is committed or the manifest does not match the table (a
         warehouse written by other code), when a new row is not newer
         than the newest committed one, or when the batch replays the
-        last committed epoch. This is the reference's full rewrite, in
-        Spark's own output layout, whose files each span every date:
-        the first expiry after one rewrites the window into slices.
+        last committed epoch. This is the reference's full rewrite
+        (:func:`process_micro_batch`), in Spark's own output layout,
+        whose files each span every date: the first expiry after one
+        rewrites the window into slices.
 
     Replay (T3): a re-run of the last committed epoch (same id, same
     rows) first drops that epoch's rows, so the same or a later
@@ -307,7 +393,8 @@ def e2_micro_batch(
     epoch, now_us = int(epoch_id), _us(now)
     cutoff = now - _dt.timedelta(days=history_days)
     wh = warehouse_path.rstrip("/")
-    staged_dir = sink.subpath(wh, sink.STAGING, "data")
+    stage = sink.subpath(wh, sink.STAGING)
+    staged_dir = sink.subpath(stage, sink.STAGED_DATA)
 
     # recover before listing: a table parked at __old by a crashed swap
     # lists as empty, and "no files" means first run, which would
@@ -319,8 +406,6 @@ def e2_micro_batch(
     if files is not None and sorted(files) != live:
         files = None  # the table changed outside these commits
     schema = None if files is None else StructType.fromJson(state["schema"])
-    new_rows = batch_rows(batch_df, clock=F.lit(now))
-    cols = new_rows.columns + _METRICS
 
     replay = (
         files is not None
@@ -334,6 +419,7 @@ def e2_micro_batch(
     fold: list[str] = []
 
     if whole:
+        new_rows = batch_rows(batch_df, clock=F.lit(now))
         history = None
         if live:
             history = _read(spark, wh, live).filter(F.col("date") >= F.lit(cutoff))
@@ -342,41 +428,51 @@ def e2_micro_batch(
                     "date", F.lit(_at(state["now_us"]))
                 )
                 history = history.join(mine, ["symbol", "date"], "left_anti")
-        out = process_micro_batch(batch_df, history, clock=F.lit(now)).select(*cols)
+        out = process_micro_batch(batch_df, history, clock=F.lit(now))
+        out = out.select(*new_rows.columns, *_METRICS)
+        schema = out.schema
+        out.write.mode("overwrite").parquet(staged_dir)
+        staged = sink.data_files(spark, staged_dir)
+        rows = _read(spark, staged_dir, staged, schema)
+        ranges = _date_ranges(rows)
+        _last_rows(rows, TAIL_ROWS).coalesce(1).write.mode("overwrite").parquet(
+            sink.subpath(stage, sink.STAGED_TAIL)
+        )
     else:
+        ss = batch_df.sparkSession
         tail_dir = sink.subpath(wh, sink.TAIL)
         old_tail = _read(
-            spark, tail_dir, sink.data_files(spark, tail_dir), _tail_schema(schema)
+            ss, tail_dir, sink.data_files(spark, tail_dir), _tail_schema(schema)
         ).filter(F.col("date") >= F.lit(cutoff))
-        both = union_history(
-            old_tail.withColumn("_new", F.lit(False)),
-            new_rows.withColumn("_new", F.lit(True)),
-        )
-        out = calculate_metrics(both).filter("_new").select(*cols)
+        out = _batch_statement(batch_df, old_tail, now)
         if files and _us(cutoff) > min(v[0] for v in files.values()):
-            expiry = _expiry_files(spark, wh, files, schema, cutoff, old_tail)
+            expiry = _expiry_files(ss, wh, files, schema, cutoff, old_tail)
         fold = _fold_run(files, expiry)
         if fold:
-            out = _read(spark, wh, fold, schema).select(*cols).unionByName(out)
-        out = out.coalesce(1)
-    out.write.mode("overwrite").parquet(staged_dir)
-    if expiry:  # a write of their own: no slice may hold the batch's rows
-        size = sum(files[f][2] for f in expiry)
-        _restated(spark, wh, expiry, schema, cutoff).select(*cols).repartitionByRange(
-            max(1, -(-size // SLICE_BYTES)), "date"
-        ).write.mode("append").parquet(staged_dir)
+            out = _read(ss, wh, fold, schema).withColumn(
+                sink.STAGE_COL, F.lit("data")
+            ).unionByName(out)
+        out.coalesce(1).write.mode("append").partitionBy(sink.STAGE_COL).parquet(stage)
+        staged = sink.data_files(spark, staged_dir)
+        # one file: the folded files and the batch
+        lo = min([now_us, *(files[f][0] for f in fold)])
+        ranges = {n: (lo, now_us) for n in staged}
+        if expiry:  # a write of their own: no slice may hold the batch's rows
+            size = sum(files[f][2] for f in expiry)
+            (
+                _restated(ss, wh, expiry, schema, cutoff)
+                .select(*schema.names)
+                .repartitionByRange(max(1, -(-size // SLICE_BYTES)), "date")
+                .write.mode("append")
+                .parquet(staged_dir)
+            )
+            slices = {
+                n: v for n, v in sink.data_files(spark, staged_dir).items()
+                if n not in staged
+            }
+            ranges.update(_date_ranges(_read(ss, staged_dir, slices, schema)))
+            staged.update(slices)
 
-    staged = sink.data_files(spark, staged_dir)
-    rows = _read(spark, staged_dir, staged, out.schema)
-    if whole or expiry:
-        ranges = {
-            r[0]: (r[1], r[2])
-            for r in rows.groupBy(F.col("_metadata.file_name"))
-            .agg(F.min(F.unix_micros("date")), F.max(F.unix_micros("date")))
-            .collect()
-        }
-    else:  # one file: the folded files and the batch
-        ranges = {n: (min([now_us, *(files[f][0] for f in fold)]), now_us) for n in staged}
     # restated rows are dated up to the expiry's newest; later ones are appended
     edge = max((files[f][1] for f in expiry), default=None)
     prefix = f"epoch-{epoch}-{uuid.uuid4().hex[:8]}"
@@ -388,13 +484,6 @@ def e2_micro_batch(
         add[n] = f"{prefix}-{k}.parquet"
         manifest[add[n]] = [lo, hi, size, int(not whole and (edge is None or lo > edge))]
 
-    # the tail's new rows come from the staged files, not a recompute
-    tail = rows.select("symbol", "date", "close")
-    if not whole:
-        tail = old_tail.unionByName(tail.filter(F.col("date") == F.lit(now)))
-    _last_rows(tail, TAIL_ROWS).coalesce(1).write.mode("overwrite").parquet(
-        sink.subpath(wh, sink.STAGING, "tail")
-    )
     sink.commit_table(
         spark,
         wh,
@@ -403,10 +492,20 @@ def e2_micro_batch(
         state={
             "epoch": epoch,
             "now_us": now_us,
-            "schema": out.schema.jsonValue(),
+            "schema": schema.jsonValue(),
             "files": manifest,
         },
     )
+
+
+def _date_ranges(rows: DataFrame) -> dict:
+    """File name → (oldest, newest) date of its rows, in microseconds."""
+    return {
+        r[0]: (r[1], r[2])
+        for r in rows.groupBy(F.col("_metadata.file_name"))
+        .agg(F.min(F.unix_micros("date")), F.max(F.unix_micros("date")))
+        .collect()
+    }
 
 
 def _tail_schema(schema: StructType) -> StructType:

@@ -237,3 +237,125 @@ def test_start_incremental_passes_benchmark_oracle(spark, tmp_path):
     names = data_files(spark, wh)
     for e in (1, 2, 3):
         assert sum(n.startswith(f"epoch-{e}-") for n in names) == 1, names
+
+
+_FEED = (
+    "_feed string, symbol string, longName string, regularMarketPrice double, "
+    "regularMarketChange double, regularMarketChangePercent double, "
+    "marketCap bigint, _ingest_ts bigint, open double, high double, low double, "
+    "close double, volume bigint, timestamp timestamp"
+)
+
+
+def _brapi(sym, ingest, feed="brapi"):
+    v = 0 if ingest is None else ingest
+    return (feed, sym, f"{sym} SA", 10.0 + v, 0.5 + v, 0.1 * v, 1000 * (v + 1), ingest,
+            None, None, None, None, None, None)
+
+
+def _yfin(sym, minute, opn=9.0, close=None, feed="yfinance"):
+    close = 10.0 + minute if close is None else close
+    ts = None if minute is None else T0 + dt.timedelta(minutes=minute)
+    return (feed, sym, None, None, None, None, None, None,
+            opn, close + 1, close - 1, close, 100 + (minute or 0), ts)
+
+
+def test_e2_batch_statement_reduces_feeds_as_batch_rows(spark):
+    """The single statement's feed reduction against the two-feed
+    reference (``batch_rows`` through ``process_micro_batch``, no
+    history) on feeds with: a symbol on one feed only, a symbol whose
+    brapi ``_ingest_ts`` values are all null, raw and ``.SA`` yfinance
+    rows of one symbol, a ``.SA`` brapi symbol, null and unknown
+    ``_feed`` values, a null symbol, rows that carry the other feed's
+    columns too, and ``open == 0``. Each feed runs
+    alone and all of them together; the statement's tail rows are its
+    new rows."""
+    feeds = {
+        "one feed only": (
+            [_brapi("A1", 1), _yfin("A2", 1), _brapi("OK", 2), _yfin("OK", 2)], {"OK"}
+        ),
+        "null ingest_ts": (
+            [_brapi("B1", None), _brapi("B1", None), _yfin("B1", 3),
+             _brapi("B2", None), _brapi("B2", 4), _brapi("B2", 2), _yfin("B2", 1)],
+            {"B2"},  # B1's latest brapi row is undefined: no marketCap
+        ),
+        ".SA suffixes": (
+            [_brapi("C1", 1), _yfin("C1", 1), _yfin("C1.SA", 5), _yfin("C1", 3),
+             _brapi("C2", 1), _yfin("C2.SA", 2), _yfin("C2", 7),
+             _brapi("C3.SA", 1), _yfin("C3", 1), _yfin("C3.SA", 2)],
+            {"C1", "C2"},
+        ),
+        "null and unknown feed": (
+            [_brapi("D1", 1), _yfin("D1", 1, feed=None),
+             _brapi("D2", 1), _yfin("D2", 1), _brapi("D2", 9, feed="bloomberg"),
+             _yfin("D2", 9, feed="bloomberg"), _brapi("D2", 5, feed=None),
+             _brapi(None, 1), _yfin(None, 1)],
+            {"D2"},
+        ),
+        "other feed's columns set": (
+            [_brapi("F1", 1), _yfin("F1", 1),
+             _brapi("F1", 1)[:8] + _yfin("F1", 9)[8:],
+             _yfin("F1", 1)[:2] + _brapi("F1", 9)[2:8] + _yfin("F1", 2)[8:]],
+            {"F1"},
+        ),
+        "open == 0": (
+            [_brapi("E1", 1), _yfin("E1", 1, opn=0.0), _brapi("E2", 1),
+             _yfin("E2", 2, opn=None), _brapi("E3", 1), _yfin("E3", 3, close=0.0)],
+            {"E1", "E2", "E3"},
+        ),
+    }
+    feeds["all together"] = (
+        [r for rows, _ in feeds.values() for r in rows],
+        set().union(*(s for _, s in feeds.values())),
+    )
+    now = T0 + dt.timedelta(hours=1)
+    empty_tail = spark.createDataFrame([], "symbol string, date timestamp, close double")
+    for name, (rows, kept) in feeds.items():
+        feed = spark.createDataFrame(rows, _FEED)
+        want = P.process_micro_batch(feed, None, clock=F.lit(now))
+        got = P._batch_statement(feed, empty_tail, now)
+        data = got.filter("_stage = 'data'").select(*want.columns)
+        assert {r.symbol for r in want.collect()} == kept, name
+        assert sorted(map(tuple, data.collect())) == sorted(map(tuple, want.collect())), name
+        tail = got.filter("_stage = 'tail'").select("symbol", "date", "close")
+        assert sorted(map(tuple, tail.collect())) == sorted(
+            map(tuple, want.select("symbol", "date", "close").collect())
+        ), name
+
+
+def test_e2_append_runs_three_jobs_and_scans_the_feed_once(spark, tmp_path):
+    """A plain append is one statement and one write: at most three
+    Spark jobs (the feed reduction's exchange, the window's exchange
+    and the write), reading each feed row and each tail row once."""
+    wh = str(tmp_path / "wh")
+    _seed(wh)
+    m = dt.timedelta(minutes=1)
+    P.e2_micro_batch(_batch(spark, str(tmp_path / "f0.parquet"), 0, ALL), 0, spark, wh, now=T0 + m)
+    feed = str(tmp_path / "f1.parquet")
+    batch = _batch(spark, feed, 1, ALL)
+    expect_rows = pq.read_metadata(feed).num_rows + pq.read_table(os.path.join(wh, "_tail")).num_rows
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    group = f"e2-append-{tmp_path.name}"
+    sc.setJobGroup(group, "one append batch")
+    try:
+        P.e2_micro_batch(batch, 1, spark, wh, now=T0 + 2 * m)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    bus.waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in sc.statusTracker().getJobInfo(j).stageIds}
+    store = sc._jsc.sc().statusStore()
+    listed = store.stageList(
+        None, False, False, sc._gateway.new_array(spark._jvm.double, 0),
+        spark._jvm.java.util.ArrayList(),
+    )
+    read = sum(
+        listed.apply(i).inputRecords()
+        for i in range(listed.size())
+        if listed.apply(i).stageId() in stages
+    )
+    assert len(jobs) <= 3, f"{len(jobs)} Spark jobs"
+    assert read == expect_rows, f"read {read} rows, feed + tail hold {expect_rows}"
+    assert len(data_files(spark, wh)) == 2  # the seed and the batch

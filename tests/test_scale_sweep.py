@@ -53,6 +53,9 @@ FAMILY_SAMPLE = [
     "png_decode_stats",       # stdlib codec via mapInPandas
     "scd2_history",           # slowly-changing-dimension windows
     "funnel_conversion",      # sessionized event funnel
+    "corpus_curation",        # zero-join aggregation pipeline (r17)
+    "asof_join",              # single-scan as-of join (r17)
+    "semi_anti_join",         # semi/anti marker join (r17)
 ]
 
 SWEEP = REVENUE_FAMILY + FAMILY_SAMPLE
