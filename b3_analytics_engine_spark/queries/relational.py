@@ -304,13 +304,19 @@ def semi_anti_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pricing_summary",
     oracle="""
 SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 6) AS sum_qty,
-       round(sum(l_extendedprice), 6) AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 6) AS sum_disc_price,
-       round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 6) AS sum_charge,
-       round(avg(l_quantity), 6) AS avg_qty,
-       round(avg(l_extendedprice), 6) AS avg_price,
-       round(avg(l_discount), 6) AS avg_disc,
+       round(CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE), 6) AS sum_qty,
+       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE), 6)
+         AS sum_base_price,
+       round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6)))
+                  AS DOUBLE), 6) AS sum_disc_price,
+       round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax)
+                           AS DECIMAL(38,6))) AS DOUBLE), 6) AS sum_charge,
+       round(CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) / count(*), 6)
+         AS avg_qty,
+       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) / count(*), 6)
+         AS avg_price,
+       round(CAST(sum(CAST(l_discount AS DECIMAL(38,6))) AS DOUBLE) / count(*), 6)
+         AS avg_disc,
        count(*) AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '2001-09-02 00:00:00'
@@ -319,25 +325,33 @@ GROUP BY l_returnflag, l_linestatus
     survey="A7 P1 P3 (TPC-H Q1 pattern)",
     description="Pricing summary (TPC-H Q1 shape): wide aggregation "
     "with map-side partial aggregation — the headline scan+agg "
-    "benchmark query.",
+    "benchmark query. Sums accumulate in DECIMAL(38,6), as TPC-H "
+    "specifies and as `regional_revenue` does: each per-row double is "
+    "cast to decimal, so the sum (and each average, the decimal sum "
+    "as a double over count(*)) does not depend on summation order.",
 )
 def pricing_summary_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    n = F.count(F.lit(1))
+
+    def dsum(c):
+        return F.sum(c.cast("decimal(38,6)")).cast("double")
+
     return (
         li.filter(
             F.col("l_shipdate") <= F.lit("2001-09-02 00:00:00").cast("timestamp")
         )
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 6).alias("sum_base_price"),
-            F.round(F.sum(disc_price), 6).alias("sum_disc_price"),
-            F.round(F.sum(disc_price * (1 + F.col("l_tax"))), 6).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 6).alias("avg_price"),
-            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
+            F.round(dsum(F.col("l_quantity")), 6).alias("sum_qty"),
+            F.round(dsum(F.col("l_extendedprice")), 6).alias("sum_base_price"),
+            F.round(dsum(disc_price), 6).alias("sum_disc_price"),
+            F.round(dsum(disc_price * (1 + F.col("l_tax"))), 6).alias("sum_charge"),
+            F.round(dsum(F.col("l_quantity")) / n, 6).alias("avg_qty"),
+            F.round(dsum(F.col("l_extendedprice")) / n, 6).alias("avg_price"),
+            F.round(dsum(F.col("l_discount")) / n, 6).alias("avg_disc"),
+            n.alias("count_order"),
         )
     )
 

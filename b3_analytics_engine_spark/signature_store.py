@@ -19,10 +19,15 @@ Scale notes:
   into a metastore table so the verify self-join is co-located; plain
   directory Parquet keeps this module metastore-free and the join
   AQE-planned.
-- Writes go through a staging directory + atomic rename swap
-  (:func:`..sinks.files.replace_directory`), so a crashed writer
-  never leaves a half-artifact that a reader mistakes for complete;
-  completeness is additionally gated on the ``_SUCCESS`` marker.
+- Every write is staged by one step, :meth:`SignatureStore._stage`
+  (a ``__staging`` sibling directory, optionally partitioned by
+  ``cell``, plus any marker files), and published by an atomic
+  rename swap (:func:`..sinks.files.replace_directory`) in exactly
+  two commit methods: :meth:`SignatureStore._write_atomic` for a
+  base and :meth:`SignatureStore._append_delta` for a delta batch.
+  A crashed writer never leaves a half-artifact that a reader
+  mistakes for complete; completeness is additionally gated on the
+  ``_SUCCESS`` marker.
 - Artifacts are immutable snapshots of the corpus AT WRITE TIME,
   plus zero or more committed delta batches (``append_batch`` — the
   incremental workflow's O(batch) commit; see
@@ -62,6 +67,10 @@ from .sinks.files import (
     recover_parked_directory,
     replace_directory,
 )
+
+#: bucket keys of the two hot-bucket censuses
+_BAND_KEYS = ("band", "bh")
+_CHUNK_KEYS = ("chunk", "cv")
 
 
 def _with_lease(fn):
@@ -364,18 +373,57 @@ class SignatureStore:
             jvm.org.apache.hadoop.fs.Path(os.path.join(path, "_SUCCESS"))
         )
 
-    def _write_atomic(self, df: DataFrame, path: str) -> None:
-        """Write to a staging dir, then atomic-rename into place — a
-        crashed write leaves no ``_SUCCESS``-bearing half-artifact.
-        A base (re)write also clears the artifact's delta tree: the
-        new base IS the full snapshot."""
-        tmp = path.rstrip("/") + "__staging"
-        df.write.mode("overwrite").parquet(tmp)
+    def _stage(
+        self,
+        df: DataFrame,
+        path: str,
+        suffix: str = "__staging",
+        partition_by: str | None = None,
+        markers=(),
+    ) -> str:
+        """The one staging step: write ``df`` to ``<path><suffix>``
+        and create the ``markers`` (names relative to it) inside, so
+        they ride the same atomic swap as the rows. Returns the
+        staging dir; nothing is visible until :meth:`_publish`."""
+        tmp = path.rstrip("/") + suffix
+        w = df.write.mode("overwrite")
+        if partition_by is not None:
+            # static overwrite per-write: the session's dynamic
+            # partitionOverwriteMode skips the _SUCCESS marker the
+            # completeness gate needs, and staging dirs are fresh anyway
+            w = w.option("partitionOverwriteMode", "static").partitionBy(
+                partition_by
+            )
+        w.parquet(tmp)
+        jvm, fs, _ = _hadoop_fs(self.spark, tmp)
+        for nm in markers:
+            fs.create(jvm.org.apache.hadoop.fs.Path(os.path.join(tmp, nm)),
+                      True).close()
+        return tmp
+
+    def _publish(self, tmp: str, path: str, gc=()) -> None:
+        """Swap the staged ``tmp`` into ``path``, then delete the
+        ``gc`` directories the new copy supersedes (markers inside it
+        make those deletes safe to crash)."""
         replace_directory(self.spark, tmp, path)
         jvm, fs, _ = _hadoop_fs(self.spark, path)
-        dp = jvm.org.apache.hadoop.fs.Path(self._delta_root(path))
-        if fs.exists(dp):
-            fs.delete(dp, True)
+        for p in gc:
+            hp = jvm.org.apache.hadoop.fs.Path(p)
+            if fs.exists(hp):
+                fs.delete(hp, True)
+
+    def _write_atomic(
+        self, df: DataFrame, path: str, partition_by: str | None = None
+    ) -> None:
+        """Stage, then atomic-rename into place — a crashed write
+        leaves no ``_SUCCESS``-bearing half-artifact. A base (re)write
+        also clears the artifact's delta tree: the new base IS the
+        full snapshot. ``partition_by="cell"`` lets IVF probes prune."""
+        self._publish(
+            self._stage(df, path, partition_by=partition_by),
+            path,
+            [self._delta_root(path)],
+        )
 
     # --------------------------------------------------- delta batches
     # An artifact = its base directory plus zero or more committed
@@ -524,6 +572,22 @@ class SignatureStore:
         self._recover_if_parked(path, corpus)
         return not self._is_complete(path)
 
+    def _build(
+        self, path: str, corpus: str, refresh: bool, write, missing=None
+    ) -> None:
+        """The lazy getters' double-checked build: run ``write()``
+        under the corpus lease only if :meth:`_needs_build` still
+        holds once the lease is taken, so two jobs racing a first
+        build never collide on the staging dir. ``missing``, when
+        set, is raised as a ValueError instead of building (a getter
+        with no frame to build from)."""
+        if self._needs_build(path, corpus, refresh):
+            if missing is not None:
+                raise ValueError(missing)
+            with self.lock(corpus):
+                if self._needs_build(path, corpus, refresh):
+                    write()
+
     def _recover_parked_base(self, path: str) -> None:
         """Mid-swap recovery for an ARTIFACT BASE directory: a crash
         between :func:`..sinks.files.replace_directory`'s two renames
@@ -632,7 +696,17 @@ class SignatureStore:
     #: base instead (or run compact() after).
     DELTA_MAX_FILES = 4
 
-    def _append_delta(self, df: DataFrame, path: str, batch: str) -> None:
+    def _append_delta(
+        self,
+        df: DataFrame,
+        path: str,
+        batch: str,
+        partition_by: str | None = None,
+    ) -> None:
+        """The delta commit: stage ``df`` (at most
+        :attr:`DELTA_MAX_FILES` files) and swap it in as
+        ``<path>__delta/<batch>``, replacing any earlier commit of
+        that batch wholesale (the at-least-once replay contract)."""
         self._validate_batch_name(batch)
         if batch in self._folded_names(path):
             # a committed-then-compacted name can never be replayed:
@@ -646,9 +720,11 @@ class SignatureStore:
                 "unreadable — use a new batch name or refresh the base"
             )
         dst = os.path.join(self._delta_root(path), batch)
-        tmp = dst.rstrip("/") + "__staging"
-        df.coalesce(self.DELTA_MAX_FILES).write.mode("overwrite").parquet(tmp)
-        replace_directory(self.spark, tmp, dst)
+        self._publish(
+            self._stage(df.coalesce(self.DELTA_MAX_FILES), dst,
+                        partition_by=partition_by),
+            dst,
+        )
 
     def _read(self, path: str, exclude_batch: str | None = None) -> DataFrame:
         """Base + committed deltas as one frame (multi-path scan; all
@@ -717,13 +793,9 @@ class SignatureStore:
         :func:`..operators.dedup.hashed_postings` (pinned by
         ``tests/test_signature_store.py``)."""
         path = self.postings_path(corpus, n, portable)
-        if self._needs_build(path, corpus, refresh):
-            with self.lock(corpus):  # double-checked first build
-                if self._needs_build(path, corpus, refresh):
-                    self._write_atomic(
-                        hashed_postings(df, id_col, text_col, n, portable),
-                        path,
-                    )
+        self._build(path, corpus, refresh, lambda: self._write_atomic(
+            hashed_postings(df, id_col, text_col, n, portable), path
+        ))
         return self._read(path, exclude_batch)
 
     def signatures(
@@ -744,17 +816,14 @@ class SignatureStore:
         already exist) and itself persisted. Row-identical to
         :func:`..operators.dedup.minhash_signatures`."""
         path = self.signatures_path(corpus, n, portable, num_hashes, seed)
-        if self._needs_build(path, corpus, refresh):
-            with self.lock(corpus):
-                if self._needs_build(path, corpus, refresh):
-                    posts = self.postings(
-                        df, corpus, id_col, text_col, n, portable,
-                        refresh=refresh,
-                    )
-                    self._write_atomic(
-                        _signatures_from_hashed(posts, num_hashes, seed),
-                        path,
-                    )
+        self._build(path, corpus, refresh, lambda: self._write_atomic(
+            _signatures_from_hashed(
+                self.postings(df, corpus, id_col, text_col, n, portable,
+                              refresh=refresh),
+                num_hashes, seed,
+            ),
+            path,
+        ))
         return self._read(path, exclude_batch)
 
     def simhash_path(
@@ -791,15 +860,9 @@ class SignatureStore:
         cannot reconstruct batch documents (their text is not stored).
         ``validate()`` flags that inconsistency."""
         path = self.simhash_path(corpus, nbits, portable)
-        if self._needs_build(path, corpus, refresh):
-            with self.lock(corpus):
-                if self._needs_build(path, corpus, refresh):
-                    self._write_atomic(
-                        simhash_signatures(
-                            df, id_col, text_col, nbits, portable
-                        ),
-                        path,
-                    )
+        self._build(path, corpus, refresh, lambda: self._write_atomic(
+            simhash_signatures(df, id_col, text_col, nbits, portable), path
+        ))
         return self._read(path, exclude_batch)
 
     def simhash_census_path(
@@ -823,35 +886,11 @@ class SignatureStore:
         a refresh or escapes the compaction delta watch. Listing
         only — no data is read. Incomplete (crashed-write) variants
         are skipped, like every other read."""
-        jvm, fs, _ = _hadoop_fs(self.spark, self.root)
-        hp = jvm.org.apache.hadoop.fs.Path
-        croot = hp(os.path.join(self.root, "simhash_signatures", corpus))
-        if not fs.exists(croot):
-            return []
-        out = []
-        for nb_st in fs.listStatus(croot):
-            nb_name = nb_st.getPath().getName()
-            # strict name match: delta trees live as SIBLING dirs
-            # (e.g. ``portable=0__delta``) and must not parse as
-            # variants
-            if not (
-                nb_st.isDirectory()
-                and re.fullmatch(r"nbits=\d+", nb_name)
-            ):
-                continue
-            for p_st in fs.listStatus(nb_st.getPath()):
-                p_name = p_st.getPath().getName()
-                if not (
-                    p_st.isDirectory()
-                    and re.fullmatch(r"portable=[01]", p_name)
-                ):
-                    continue
-                nbits = int(nb_name.split("=", 1)[1])
-                portable = bool(int(p_name.split("=", 1)[1]))
-                if self._is_complete(self.simhash_path(corpus, nbits,
-                                                       portable)):
-                    out.append((nbits, portable))
-        return sorted(out)
+        return [
+            (nbits, bool(portable))
+            for nbits, portable in self._artifact_variants(
+                "simhash_signatures", corpus, ("nbits", "portable"))
+        ]
 
     def _artifact_variants(
         self, family: str, corpus: str, keys: tuple[str, ...]
@@ -913,48 +952,15 @@ class SignatureStore:
         way: filter ``cnt > cap`` for the corpus-side hot-bucket drop
         set of :func:`..operators.dedup.simhash_pairs_cross` without a
         per-batch O(corpus) census shuffle."""
-        chunk_bits = nbits // 4
-        chunk_mask = (1 << chunk_bits) - 1
-
-        def derive(sig: DataFrame) -> DataFrame:
-            return (
-                sig.select(
-                    F.explode(
-                        F.array(
-                            *[
-                                F.struct(
-                                    F.lit(i).alias("chunk"),
-                                    F.shiftright(F.col("sig"), i * chunk_bits)
-                                    .bitwiseAND(F.lit(chunk_mask))
-                                    .alias("cv"),
-                                )
-                                for i in range(4)
-                            ]
-                        )
-                    ).alias("ck")
-                )
-                .select("ck.chunk", "ck.cv")
-                .groupBy("chunk", "cv")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-            )
-
         path = self.simhash_census_path(corpus, nbits, portable)
-        spath = self.simhash_path(corpus, nbits, portable)
-        if self._needs_build(path, corpus, refresh):
-            with self.lock(corpus):
-                if self._needs_build(path, corpus, refresh):
-                    self.simhash(
-                        df, corpus, id_col, text_col, nbits, portable
-                    )
-                    self._write_atomic(
-                        derive(self.spark.read.parquet(spath)), path
-                    )
-        self._sync_deltas(path, spath, derive, corpus)
-        return (
-            self._read(path, exclude_batch)
-            .groupBy("chunk", "cv")
-            .agg(F.sum("cnt").alias("cnt"))
+        self._build_derived(
+            path, self.simhash_path(corpus, nbits, portable), corpus,
+            refresh,
+            lambda: self.simhash(df, corpus, id_col, text_col, nbits,
+                                 portable),
+            lambda sig: self._simhash_census_rows(sig, nbits),
         )
+        return self._sum_cnt(self._read(path, exclude_batch), _CHUNK_KEYS)
 
     def fingerprints(
         self,
@@ -972,16 +978,11 @@ class SignatureStore:
         batch's fingerprints against this instead of re-scanning the
         corpus text."""
         path = self.fingerprints_path(corpus)
-        if self._needs_build(path, corpus, refresh):
-            with self.lock(corpus):
-                if self._needs_build(path, corpus, refresh):
-                    self._write_atomic(
-                        df.select(
-                            F.col(id_col).alias("id"),
-                            fingerprint(text_col).alias("fp"),
-                        ),
-                        path,
-                    )
+        self._build(path, corpus, refresh, lambda: self._write_atomic(
+            df.select(F.col(id_col).alias("id"),
+                      fingerprint(text_col).alias("fp")),
+            path,
+        ))
         return self._read(path, exclude_batch)
 
     @staticmethod
@@ -1189,32 +1190,23 @@ class SignatureStore:
         # refresh=False call reads them; deltas were just cleared, so
         # base == snapshot — same read signatures(refresh=True) does)
         for sn, sp, sk, ss in sorted(sig4):
-            with self.lock(corpus):
-                self._write_atomic(
-                    _signatures_from_hashed(
-                        self.postings(df, corpus, id_col, text_col,
-                                      sn, bool(sp)),
-                        sk, ss,
-                    ),
-                    self.signatures_path(corpus, sn, bool(sp), sk, ss),
-                )
+            self._write_atomic(
+                _signatures_from_hashed(
+                    self.postings(df, corpus, id_col, text_col, sn, bool(sp)),
+                    sk, ss,
+                ),
+                self.signatures_path(corpus, sn, bool(sp), sk, ss),
+            )
         # sizes: the passed variant always (as before), plus every
         # other materialized one — read-through from fresh postings
         size2.add((int(n), int(portable)))
         for zn, zp in sorted(size2):
             self.sizes(df, corpus, id_col, text_col, zn, bool(zp),
                        refresh=True)
+        # censuses from the just-refreshed signatures bases
         for cn, cp, ck, cs, cb in sorted(census5):
-            with self.lock(corpus):
-                sig = self.spark.read.parquet(
-                    self.signatures_path(corpus, cn, bool(cp), ck, cs)
-                )
-                self._write_atomic(
-                    _banded_keys(sig, ck, cb)
-                    .groupBy("band", "bh")
-                    .agg(F.count(F.lit(1)).alias("cnt")),
-                    self.band_census_path(corpus, cn, bool(cp), ck, cs, cb),
-                )
+            self.band_census(df, corpus, id_col, text_col, cn, bool(cp),
+                             ck, cs, cb, refresh=True)
         # simhash is token-level (its own derivation root): an existing
         # base left un-refreshed would silently keep the OLD corpus
         # view while every shingle-derived artifact moved on — exactly
@@ -1247,6 +1239,61 @@ class SignatureStore:
     def _sizes_from_posts(posts: DataFrame) -> DataFrame:
         return posts.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
 
+    @staticmethod
+    def _band_census_rows(
+        sig: DataFrame, num_hashes: int, bands: int
+    ) -> DataFrame:
+        """``(band, bh, cnt)``: documents per LSH band key."""
+        return (
+            _banded_keys(sig, num_hashes, bands)
+            .groupBy(*_BAND_KEYS)
+            .agg(F.count(F.lit(1)).alias("cnt"))
+        )
+
+    @staticmethod
+    def _simhash_census_rows(sig: DataFrame, nbits: int) -> DataFrame:
+        """``(chunk, cv, cnt)``: documents per value of each of the
+        four ``nbits // 4``-bit SimHash chunks."""
+        chunk_bits = nbits // 4
+        chunk_mask = (1 << chunk_bits) - 1
+        chunks = [
+            F.struct(
+                F.lit(i).alias("chunk"),
+                F.shiftright(F.col("sig"), i * chunk_bits)
+                .bitwiseAND(F.lit(chunk_mask))
+                .alias("cv"),
+            )
+            for i in range(4)
+        ]
+        return (
+            sig.select(F.explode(F.array(*chunks)).alias("ck"))
+            .select("ck.chunk", "ck.cv")
+            .groupBy(*_CHUNK_KEYS)
+            .agg(F.count(F.lit(1)).alias("cnt"))
+        )
+
+    @staticmethod
+    def _sum_cnt(census: DataFrame, keys: tuple[str, ...]) -> DataFrame:
+        """Re-aggregate census rows: base and delta rows overlap on
+        bucket keys, so the live count is ``sum(cnt)`` per key."""
+        return census.groupBy(*keys).agg(F.sum("cnt").alias("cnt"))
+
+    def _build_derived(
+        self, path: str, src_path: str, corpus: str, refresh: bool,
+        build_src, derive,
+    ) -> None:
+        """Build a derived aggregate from its source artifact's base
+        (``build_src()`` first makes sure that exists), then backfill
+        one derived delta per source delta (:meth:`_sync_deltas`)."""
+
+        def write():
+            build_src()
+            self._write_atomic(derive(self.spark.read.parquet(src_path)),
+                               path)
+
+        self._build(path, corpus, refresh, write)
+        self._sync_deltas(path, src_path, derive, corpus)
+
     def sizes(
         self,
         df: DataFrame,
@@ -1265,18 +1312,11 @@ class SignatureStore:
         postings rows per batch. Ids are disjoint across base and
         deltas, so the multi-path read needs no re-aggregation."""
         path = self.sizes_path(corpus, n, portable)
-        ppath = self.postings_path(corpus, n, portable)
-        if self._needs_build(path, corpus, refresh):
-            with self.lock(corpus):
-                if self._needs_build(path, corpus, refresh):
-                    self.postings(df, corpus, id_col, text_col, n, portable)
-                    self._write_atomic(
-                        self._sizes_from_posts(
-                            self.spark.read.parquet(ppath)
-                        ),
-                        path,
-                    )
-        self._sync_deltas(path, ppath, self._sizes_from_posts, corpus)
+        self._build_derived(
+            path, self.postings_path(corpus, n, portable), corpus, refresh,
+            lambda: self.postings(df, corpus, id_col, text_col, n, portable),
+            self._sizes_from_posts,
+        )
         return self._read(path, exclude_batch)
 
     def band_census(
@@ -1301,32 +1341,15 @@ class SignatureStore:
         Base and delta rows overlap on bucket keys, so the read
         re-aggregates — over census rows (≤ distinct buckets), not
         corpus rows."""
-
-        def derive(sig: DataFrame) -> DataFrame:
-            return (
-                _banded_keys(sig, num_hashes, bands)
-                .groupBy("band", "bh")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-            )
-
         path = self.band_census_path(corpus, n, portable, num_hashes, seed, bands)
-        spath = self.signatures_path(corpus, n, portable, num_hashes, seed)
-        if self._needs_build(path, corpus, refresh):
-            with self.lock(corpus):
-                if self._needs_build(path, corpus, refresh):
-                    self.signatures(
-                        df, corpus, id_col, text_col, n, portable,
-                        num_hashes, seed,
-                    )
-                    self._write_atomic(
-                        derive(self.spark.read.parquet(spath)), path
-                    )
-        self._sync_deltas(path, spath, derive, corpus)
-        return (
-            self._read(path, exclude_batch)
-            .groupBy("band", "bh")
-            .agg(F.sum("cnt").alias("cnt"))
+        self._build_derived(
+            path, self.signatures_path(corpus, n, portable, num_hashes, seed),
+            corpus, refresh,
+            lambda: self.signatures(df, corpus, id_col, text_col, n,
+                                    portable, num_hashes, seed),
+            lambda sig: self._band_census_rows(sig, num_hashes, bands),
         )
+        return self._sum_cnt(self._read(path, exclude_batch), _BAND_KEYS)
 
     # ------------------------------------------------- compaction
     def maybe_compact(
@@ -1349,22 +1372,11 @@ class SignatureStore:
         without taking the lease when under threshold (the count is a
         listing, not a scan); otherwise returns ``compact()``'s fold
         count."""
-        paths = [
-            self.fingerprints_path(corpus),
-            self.postings_path(corpus, n, portable),
-            self.signatures_path(corpus, n, portable, num_hashes, seed),
-            self.sizes_path(corpus, n, portable),
-            self.band_census_path(corpus, n, portable, num_hashes, seed),
-        ]
-        for nbits, sh_portable in self._simhash_variants(corpus):
-            paths.append(self.simhash_path(corpus, nbits, sh_portable))
-            paths.append(
-                self.simhash_census_path(corpus, nbits, sh_portable)
-            )
         live = max(
             (
                 len(self._delta_paths(p, exclude=exclude))
-                for p in paths
+                for p, _ in self._fold_targets(
+                    corpus, n, portable, num_hashes, seed)
                 if self._is_complete(p)
             ),
             default=0,
@@ -1438,54 +1450,69 @@ class SignatureStore:
                 None, corpus, n=n, portable=portable,
                 num_hashes=num_hashes, seed=seed,
             )
-        simhash_variants = self._simhash_variants(corpus)
-        for nbits, sh_portable in simhash_variants:
+        for nbits, sh_portable in self._simhash_variants(corpus):
             if self._is_complete(
                 self.simhash_census_path(corpus, nbits, sh_portable)
             ):
                 self.simhash_census(
                     None, corpus, nbits=nbits, portable=sh_portable
                 )
-        # derived censuses re-aggregate on fold; everything else is an
-        # id-disjoint plain union
-        census_reagg = lambda m: m.groupBy("chunk", "cv").agg(  # noqa: E731
-            F.sum("cnt").alias("cnt")
+        return max(
+            self._compact_one(path, exclude, census_keys)
+            for path, census_keys in self._fold_targets(
+                corpus, n, portable, num_hashes, seed)
         )
+
+    def _fold_targets(
+        self, corpus: str, n: int, portable: bool, num_hashes: int, seed: int
+    ) -> list[tuple[str, tuple[str, ...] | None]]:
+        """``(path, census keys)`` of every artifact :meth:`compact`
+        folds, in fold order. Censuses re-aggregate ``sum(cnt)`` over
+        their keys on fold; everything else (keys None) is an
+        id-disjoint plain union."""
         targets = [
             (self.fingerprints_path(corpus), None),
             (self.postings_path(corpus, n, portable), None),
-            (
-                self.signatures_path(corpus, n, portable, num_hashes, seed),
-                None,
-            ),
+            (self.signatures_path(corpus, n, portable, num_hashes, seed), None),
             (self.sizes_path(corpus, n, portable), None),
-            (
-                self.band_census_path(corpus, n, portable, num_hashes, seed),
-                lambda m: m.groupBy("band", "bh").agg(
-                    F.sum("cnt").alias("cnt")
-                ),
-            ),
+            (self.band_census_path(corpus, n, portable, num_hashes, seed),
+             _BAND_KEYS),
         ]
-        for nbits, sh_portable in simhash_variants:
-            targets.append(
-                (self.simhash_path(corpus, nbits, sh_portable), None)
-            )
-            targets.append(
-                (
-                    self.simhash_census_path(corpus, nbits, sh_portable),
-                    census_reagg,
-                )
-            )
-        folded = 0
-        for path, reagg in targets:
-            folded = max(folded, self._compact_one(path, exclude, reagg))
-        return folded
+        for nbits, sh_portable in self._simhash_variants(corpus):
+            targets.append((self.simhash_path(corpus, nbits, sh_portable), None))
+            targets.append((self.simhash_census_path(corpus, nbits, sh_portable),
+                            _CHUNK_KEYS))
+        return targets
+
+    def _ledger_markers(self, path: str, ledger) -> list[str]:
+        """Markers a rewrite of ``path``'s base carries into its
+        staging dir: ``_folded/<batch>`` for every ledger name, plus
+        the base's rescale provenance markers."""
+        return [os.path.join("_folded", nm) for nm in ledger] + list(
+            self._rescale_markers(path)
+        )
+
+    def _read_roots(self, path: str, deltas: list[str]) -> DataFrame:
+        """Base + ``deltas`` of a cell-partitioned artifact, read per
+        root and unioned, NOT as one multi-path read: each root is its
+        own partitioned table, so Spark's partition discovery — and
+        the pruning a probe's ``cell IN (...)`` filter relies on —
+        works per scan; a multi-path read would try to infer one
+        partition scheme across roots of different depths. Deltas are
+        read with the base's EXPLICIT schema: an epoch where every
+        row deduped away commits an EMPTY delta (the replay contract
+        still needs the wholesale-replace target), and an empty dir
+        has nothing to infer a schema from."""
+        out = self.spark.read.parquet(path)
+        for d in deltas:
+            out = out.unionByName(self.spark.read.schema(out.schema).parquet(d))
+        return out
 
     def _compact_one(
         self,
         path: str,
         exclude: str | None = None,
-        reagg=None,
+        census_keys: tuple[str, ...] | None = None,
         partition_by: str | None = None,
     ) -> int:
         """Fold one artifact's deltas into its base with the marker
@@ -1525,39 +1552,22 @@ class SignatureStore:
         if partition_by is None:
             merged = self.spark.read.parquet(path, *deltas)
         else:
-            # per-root reads (each root is its own partitioned table);
-            # explicit base schema because a delta may be EMPTY (an
-            # epoch where everything deduped away)
-            merged = self.spark.read.parquet(path)
-            for d in deltas:
-                merged = merged.unionByName(
-                    self.spark.read.schema(merged.schema).parquet(d)
-                )
-        if reagg is not None:
-            merged = reagg(merged)
-        tmp = path.rstrip("/") + "__staging"
-        w = merged.write.mode("overwrite")
-        if partition_by is not None:
-            # static per-write: dynamic mode skips the _SUCCESS marker
-            w = w.option("partitionOverwriteMode", "static").partitionBy(
-                partition_by
-            )
-        w.parquet(tmp)
+            merged = self._read_roots(path, deltas)
+        if census_keys is not None:
+            merged = self._sum_cnt(merged, census_keys)
         # markers ride the staging dir into the atomic swap: the
         # folded rows and the folded-ness of their deltas publish
         # together or not at all (ledger = newly folded ∪ all prior);
         # rescale provenance markers ride the same swap or ivf_orphans
-        # and the rescale re-run guard lose their record
-        for nm in ledger:
-            fs.create(hp(os.path.join(tmp, "_folded", nm)), True).close()
-        for nm in self._rescale_markers(path):
-            fs.create(hp(os.path.join(tmp, nm)), True).close()
-        replace_directory(self.spark, tmp, path)
-        # GC the ACTUAL folded directories (a parked ``<batch>__old``
-        # stand-in lives under its physical name, not the bare one);
-        # markers make this safe to crash
-        for d in deltas:
-            fs.delete(hp(d), True)
+        # and the rescale re-run guard lose their record. The GC then
+        # deletes the ACTUAL folded directories (a parked
+        # ``<batch>__old`` stand-in lives under its physical name)
+        self._publish(
+            self._stage(merged, path, partition_by=partition_by,
+                        markers=self._ledger_markers(path, ledger)),
+            path,
+            deltas,
+        )
         return len(names)
 
     # ------------------------------------------- IVF vector index
@@ -1749,32 +1759,41 @@ class SignatureStore:
         import numpy as np
 
         path = self.ivf_centroids_path(corpus, n_centroids, iters)
-        if self._needs_build(path, corpus, refresh):
-            if df is None:
-                raise ValueError(
-                    f"corpus {corpus!r} has no IVF centroids at {path} "
-                    "and no df given to train them — check that "
-                    "n_centroids/iters match the index you built"
-                )
-            with self.lock(corpus):
-                if self._needs_build(path, corpus, refresh):
-                    C = kmeans_centroids(
-                        df, n_centroids, id_col=id_col, vec_col=vec_col,
-                        iters=iters,
-                    )
-                    rows = [
-                        (i, [float(x) for x in C[i]]) for i in range(len(C))
-                    ]
-                    self._write_atomic(
-                        self.spark.createDataFrame(
-                            rows, "cell int, v array<double>"
-                        ).coalesce(1),
-                        path,
-                    )
+        self._build(
+            path, corpus, refresh,
+            lambda: self._write_centroids(
+                kmeans_centroids(df, n_centroids, id_col=id_col,
+                                 vec_col=vec_col, iters=iters),
+                path,
+            ),
+            missing=None if df is not None else (
+                f"corpus {corpus!r} has no IVF centroids at {path} "
+                "and no df given to train them — check that "
+                "n_centroids/iters match the index you built"
+            ),
+        )
         got = sorted(
             self.spark.read.parquet(path).collect(), key=lambda r: r["cell"]
         )
         return np.asarray([r["v"] for r in got], dtype=np.float64)
+
+    @staticmethod
+    def _no_index(corpus: str, path: str) -> ValueError:
+        """The refusal of an IVF maintenance call with no index built."""
+        return ValueError(
+            f"corpus {corpus!r} has no IVF index at {path}; build it "
+            "first (ivf_index with the corpus frame)"
+        )
+
+    def _write_centroids(self, C, path: str) -> None:
+        """Publish a trained quantizer as the tiny ``(cell, v)`` table."""
+        self._write_atomic(
+            self.spark.createDataFrame(
+                [(i, [float(x) for x in C[i]]) for i in range(len(C))],
+                "cell int, v array<double>",
+            ).coalesce(1),
+            path,
+        )
 
     def _ivf_rows(
         self, df: DataFrame, centroids, id_col: str, vec_col: str
@@ -1790,20 +1809,18 @@ class SignatureStore:
         )
         return assigned.join(vecs, "id").select("cell", "id", "v")
 
-    def _write_partitioned(self, df: DataFrame, path: str) -> None:
-        """_write_atomic, but partitioned by ``cell`` so probes prune."""
-        tmp = path.rstrip("/") + "__staging"
-        # static overwrite per-write: the session's dynamic
-        # partitionOverwriteMode skips the _SUCCESS marker the
-        # completeness gate needs, and staging dirs are fresh anyway
-        df.write.mode("overwrite").option(
-            "partitionOverwriteMode", "static"
-        ).partitionBy("cell").parquet(tmp)
-        replace_directory(self.spark, tmp, path)
-        jvm, fs, _ = _hadoop_fs(self.spark, path)
-        dp = jvm.org.apache.hadoop.fs.Path(self._delta_root(path))
-        if fs.exists(dp):
-            fs.delete(dp, True)
+    def _reassign_delta(self, src: str, base: str, C, batch: str) -> None:
+        """Re-assign the vectors of the delta dir ``src`` under the
+        quantizer ``C`` and commit them as ``batch`` of the index at
+        ``base``. Explicit base schema: the delta may be EMPTY (an
+        epoch where everything deduped away)."""
+        vecs = self.spark.read.schema(
+            self.spark.read.parquet(base).schema
+        ).parquet(src)
+        self._append_delta(
+            self._ivf_rows(vecs.select("id", "v"), C, "id", "v"),
+            base, batch, "cell",
+        )
 
     def ivf_index(
         self,
@@ -1823,51 +1840,38 @@ class SignatureStore:
         and deltas alike. Vectors are stored cast to double so scores
         are bit-stable."""
         path = self.ivf_index_path(corpus, n_centroids, iters)
-        if self._needs_build(path, corpus, refresh):
-            if df is None:
-                raise ValueError(
-                    f"corpus {corpus!r} has no IVF index at {path} and no "
-                    "df given to build it — check that n_centroids/iters "
-                    "match the index you built"
-                )
-            with self.lock(corpus):
-                if self._needs_build(path, corpus, refresh):
-                    C = self.ivf_centroids(
-                        df, corpus, id_col, vec_col, n_centroids, iters,
-                        refresh=refresh,
-                    )
-                    self._write_partitioned(
-                        self._ivf_rows(df, C, id_col, vec_col), path
-                    )
-                    # first family for this corpus becomes the active
-                    # key; an explicit sibling build never steals it.
-                    # "First" is checked ON DISK (ivf_families), not
-                    # just by marker absence: a pre-marker store has
-                    # families but no marker, and stamping a sibling
-                    # build there would silently redirect
-                    # n_centroids=None consumers away from the
-                    # original family.
-                    if self.ivf_active(corpus) is None and all(
-                        fam == (n_centroids, iters)
-                        for fam in self.ivf_families(corpus)
-                    ):
-                        self.ivf_set_active(corpus, n_centroids, iters)
-        # per-root reads + union, NOT one multi-path read: each root
-        # (base, each delta) is its own partitioned table, so Spark's
-        # partition discovery — and the pruning a probe's
-        # ``cell IN (...)`` filter relies on — works per scan; a
-        # multi-path read would try to infer one partition scheme
-        # across roots of different depths. Deltas read with the
-        # base's EXPLICIT schema: an epoch where every row deduped
-        # away commits an EMPTY delta (the replay contract still
-        # needs the wholesale-replace target), and an empty dir has
-        # nothing to infer a schema from.
-        out = self.spark.read.parquet(path)
-        for d in self._delta_paths(path, exclude=exclude_batch):
-            out = out.unionByName(
-                self.spark.read.schema(out.schema).parquet(d)
+
+        def write():
+            C = self.ivf_centroids(
+                df, corpus, id_col, vec_col, n_centroids, iters,
+                refresh=refresh,
             )
-        return out.select("cell", "id", "v")
+            self._write_atomic(self._ivf_rows(df, C, id_col, vec_col), path,
+                               "cell")
+            # first family for this corpus becomes the active key; an
+            # explicit sibling build never steals it. "First" is
+            # checked ON DISK (ivf_families), not just by marker
+            # absence: a pre-marker store has families but no marker,
+            # and stamping a sibling build there would silently
+            # redirect n_centroids=None consumers away from the
+            # original family.
+            if self.ivf_active(corpus) is None and all(
+                fam == (n_centroids, iters)
+                for fam in self.ivf_families(corpus)
+            ):
+                self.ivf_set_active(corpus, n_centroids, iters)
+
+        self._build(
+            path, corpus, refresh, write,
+            missing=None if df is not None else (
+                f"corpus {corpus!r} has no IVF index at {path} and no "
+                "df given to build it — check that n_centroids/iters "
+                "match the index you built"
+            ),
+        )
+        return self._read_roots(
+            path, self._delta_paths(path, exclude=exclude_batch)
+        ).select("cell", "id", "v")
 
     @_with_lease
     def ivf_append(
@@ -1887,6 +1891,8 @@ class SignatureStore:
         ``ivf_index(refresh=True)`` retrains). Same ``__delta/<batch>``
         mechanics as the MinHash artifacts: atomic, idempotent on
         re-commit, folded-name refusal, ``exclude_batch``-hideable."""
+        # both name checks run before any recovery or centroid read;
+        # the commit itself (_append_delta) repeats them
         self._validate_batch_name(batch)
         path = self.ivf_index_path(corpus, n_centroids, iters)
         self._recover_if_parked(path, corpus)
@@ -1894,10 +1900,7 @@ class SignatureStore:
             self.ivf_centroids_path(corpus, n_centroids, iters), corpus
         )
         if not self._is_complete(path):
-            raise ValueError(
-                f"corpus {corpus!r} has no IVF index at {path}; build it "
-                "first (ivf_index with the corpus frame)"
-            )
+            raise self._no_index(corpus, path)
         if batch in self._folded_names(path):
             raise ValueError(
                 f"batch {batch!r} was already folded into the base of "
@@ -1906,15 +1909,9 @@ class SignatureStore:
         C = self.ivf_centroids(
             None, corpus, id_col, vec_col, n_centroids, iters
         )
-        rows = self._ivf_rows(new_df, C, id_col, vec_col)
-        dst = os.path.join(self._delta_root(path), batch)
-        tmp = dst.rstrip("/") + "__staging"
-        rows.coalesce(self.DELTA_MAX_FILES).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "static").partitionBy(
-            "cell"
-        ).parquet(tmp)
-        replace_directory(self.spark, tmp, dst)
+        self._append_delta(
+            self._ivf_rows(new_df, C, id_col, vec_col), path, batch, "cell"
+        )
 
     @_with_lease
     def ivf_compact(
@@ -2021,8 +2018,6 @@ class SignatureStore:
         one stale artifact with one fresh one); a deployment that
         cannot tolerate it should schedule retrains in the same
         maintenance slot as :meth:`compact`, when no probes run."""
-        import numpy as np
-
         from .operators.similarity import kmeans_centroids
 
         ipath = self.ivf_index_path(corpus, n_centroids, iters)
@@ -2035,10 +2030,7 @@ class SignatureStore:
         self._recover_parked_base(cpath)
         self._recover_parked_base(ipath)
         if not self._is_complete(ipath):
-            raise ValueError(
-                f"corpus {corpus!r} has no IVF index at {ipath}; build "
-                "it first (ivf_index with the corpus frame)"
-            )
+            raise self._no_index(corpus, ipath)
         jvm, fs, _ = _hadoop_fs(self.spark, ipath)
         hp = jvm.org.apache.hadoop.fs.Path
         droot = self._delta_root(ipath)
@@ -2067,58 +2059,26 @@ class SignatureStore:
             seeding="spread",
         )
         # full reassignment, staged from the still-live old view; the
-        # staging job completes before either artifact swaps
-        tmp = ipath.rstrip("/") + "__retrain_staging"
-        self._ivf_rows(live.select("id", "v"), C, "id", "v").write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "static").partitionBy(
-            "cell"
-        ).parquet(tmp)
-        for nm in ledger:
-            fs.create(hp(os.path.join(tmp, "_folded", nm)), True).close()
-        # rescale provenance survives the retrain rewrite (same
-        # carry-forward contract as the _folded ledger)
-        for nm in self._rescale_markers(ipath):
-            fs.create(hp(os.path.join(tmp, nm)), True).close()
-        # centroids first, index second (see crash contract above)
-        self._write_atomic(
-            self.spark.createDataFrame(
-                [
-                    (i, [float(x) for x in np.asarray(C[i])])
-                    for i in range(len(C))
-                ],
-                "cell int, v array<double>",
-            ).coalesce(1),
-            cpath,
+        # staging job completes before either artifact swaps. The
+        # ledger and the rescale provenance ride the index swap
+        tmp = self._stage(
+            self._ivf_rows(live.select("id", "v"), C, "id", "v"), ipath,
+            "__retrain_staging", "cell", self._ledger_markers(ipath, ledger),
         )
-        replace_directory(self.spark, tmp, ipath)
-        # GC the ACTUAL folded directories (a parked '<batch>__old'
-        # stand-in lives under its physical name); markers make this
-        # safe to crash
-        for d in deltas:
-            fs.delete(hp(d), True)
-        if exclude is not None:
+        # centroids first, index second (see crash contract above);
+        # then GC the ACTUAL folded directories (a parked
+        # '<batch>__old' stand-in lives under its physical name)
+        self._write_centroids(C, cpath)
+        self._publish(tmp, ipath, deltas)
+        # re-assign the still-live exclude delta under the NEW
+        # quantizer (its cells are stale otherwise), committed in place
+        # under the same batch name so the replay contract is
+        # untouched. A folded name's surviving dir is a GC leftover
+        # that reads already skip
+        if exclude is not None and exclude not in ledger:
             dst = os.path.join(droot, exclude)
             if fs.exists(hp(dst)):
-                # re-assign the still-live delta under the NEW
-                # quantizer (its cells are stale otherwise); staged,
-                # then swapped in place under the same batch name so
-                # the replay contract is untouched. Explicit schema:
-                # the excluded delta may be EMPTY (an epoch where
-                # everything deduped away).
-                rows = self._ivf_rows(
-                    self.spark.read.schema(
-                        self.spark.read.parquet(ipath).schema
-                    ).parquet(dst).select("id", "v"),
-                    C, "id", "v",
-                )
-                tmp2 = dst.rstrip("/") + "__staging"
-                rows.coalesce(self.DELTA_MAX_FILES).write.mode(
-                    "overwrite"
-                ).option("partitionOverwriteMode", "static").partitionBy(
-                    "cell"
-                ).parquet(tmp2)
-                replace_directory(self.spark, tmp2, dst)
+                self._reassign_delta(dst, ipath, C, exclude)
         return len(names)
 
     def ivf_maybe_retrain(
@@ -2289,8 +2249,6 @@ class SignatureStore:
         O(nprobe × occupancy target) either way.
 
         Returns the number of deltas folded into the new base."""
-        import numpy as np
-
         from .operators.similarity import kmeans_centroids
 
         if new_n_centroids == n_centroids:
@@ -2334,10 +2292,7 @@ class SignatureStore:
                     "leftover source dirs instead (see ivf_orphans) "
                     "and keep serving from the published family."
                 )
-            raise ValueError(
-                f"corpus {corpus!r} has no IVF index at {ipath}; build "
-                "it first (ivf_index with the corpus frame)"
-            )
+            raise self._no_index(corpus, ipath)
         # an INDEPENDENT completed family already living at the target
         # key must not be wholesale-replaced: its live delta tree
         # would survive the base swap and union into every read of
@@ -2569,15 +2524,7 @@ class SignatureStore:
             seeding="spread",
         )
         # stage the new family fully, then publish centroids → index
-        # (the same order + crash contract as ivf_retrain)
-        tmp = npath.rstrip("/") + "__rescale_staging"
-        self._ivf_rows(live.select("id", "v"), C, "id", "v").write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "static").partitionBy(
-            "cell"
-        ).parquet(tmp)
-        for nm in ledger:
-            fs.create(hp(os.path.join(tmp, "_folded", nm)), True).close()
+        # (the same order + crash contract as ivf_retrain). The
         # provenance marker rides the swap: marks the family as this
         # rescale's own product (see the sibling guard above). The
         # SOURCE family's provenance rides along too — a chained
@@ -2591,27 +2538,19 @@ class SignatureStore:
         # (a round-trip rescale A→B→A' would otherwise stamp A' as
         # its own orphan, and ivf_orphans would report the live
         # serving family forever).
-        fs.create(hp(os.path.join(tmp, rescale_marker)), True).close()
-        own = f"{new_n_centroids}-{iters}"
-        for nm in self._rescale_markers(ipath):
-            key = re.fullmatch(
-                r"_rescaled_(?:from|ancestor)_(\d+-\d+)", nm
-            ).group(1)
-            if key != own:
-                fs.create(
-                    hp(os.path.join(tmp, f"_rescaled_ancestor_{key}")),
-                    True,
-                ).close()
-        self._write_atomic(
-            self.spark.createDataFrame(
-                [
-                    (i, [float(x) for x in np.asarray(C[i])])
-                    for i in range(len(C))
-                ],
-                "cell int, v array<double>",
-            ).coalesce(1),
-            ncpath,
+        ancestors = [
+            re.fullmatch(r"_rescaled_(?:from|ancestor)_(\d+-\d+)", nm).group(1)
+            for nm in self._rescale_markers(ipath)
+        ]
+        tmp = self._stage(
+            self._ivf_rows(live.select("id", "v"), C, "id", "v"), npath,
+            "__rescale_staging", "cell",
+            [os.path.join("_folded", nm) for nm in ledger]
+            + [rescale_marker]
+            + [f"_rescaled_ancestor_{key}" for key in ancestors
+               if key != f"{new_n_centroids}-{iters}"],
         )
+        self._write_centroids(C, ncpath)
         # a crashed PRIOR run of this same rescale may have published
         # the base and an exclude-epoch delta already; when the
         # SOURCE's copy is authoritative that target delta is stale
@@ -2629,7 +2568,7 @@ class SignatureStore:
                     "__staging"
                 ):
                     fs.delete(st.getPath(), True)
-        replace_directory(self.spark, tmp, npath)
+        self._publish(tmp, npath)
         if exclude is not None:
             # the in-flight epoch moves families WITH its name so its
             # replay wholesale-replaces where reads now happen. The
@@ -2648,20 +2587,7 @@ class SignatureStore:
             if fs.exists(hp(src)) and (
                 use_target_copy or exclude not in src_folded
             ):
-                rows = self._ivf_rows(
-                    self.spark.read.schema(
-                        self.spark.read.parquet(npath).schema
-                    ).parquet(src).select("id", "v"),
-                    C, "id", "v",
-                )
-                dst = os.path.join(ndroot, exclude)
-                tmp2 = dst.rstrip("/") + "__staging"
-                rows.coalesce(self.DELTA_MAX_FILES).write.mode(
-                    "overwrite"
-                ).option("partitionOverwriteMode", "static").partitionBy(
-                    "cell"
-                ).parquet(tmp2)
-                replace_directory(self.spark, tmp2, dst)
+                self._reassign_delta(src, npath, C, exclude)
         # bump the active-family marker so n_centroids=None consumers
         # (streaming ingest, indexed probe) follow the rescale on
         # their next epoch/call — but only if the OLD family was the
@@ -2739,11 +2665,7 @@ class SignatureStore:
         bcp = self.band_census_path(corpus, n, portable, num_hashes, seed)
         if self._is_complete(bcp):
             self._append_delta(
-                _banded_keys(sig, num_hashes, 16)
-                .groupBy("band", "bh")
-                .agg(F.count(F.lit(1)).alias("cnt")),
-                bcp,
-                batch,
+                self._band_census_rows(sig, num_hashes, 16), bcp, batch
             )
         posts.unpersist()
         # simhash (and its census) ride along when their bases exist —
@@ -2762,31 +2684,8 @@ class SignatureStore:
             self._append_delta(sh, shp, batch)
             shcp = self.simhash_census_path(corpus, nbits, sh_portable)
             if self._is_complete(shcp):
-                chunk_bits = nbits // 4  # simhash_census's convention
-                chunk_mask = (1 << chunk_bits) - 1
                 self._append_delta(
-                    sh.select(
-                        F.explode(
-                            F.array(
-                                *[
-                                    F.struct(
-                                        F.lit(i).alias("chunk"),
-                                        F.shiftright(
-                                            F.col("sig"), i * chunk_bits
-                                        )
-                                        .bitwiseAND(F.lit(chunk_mask))
-                                        .alias("cv"),
-                                    )
-                                    for i in range(4)
-                                ]
-                            )
-                        ).alias("ck")
-                    )
-                    .select("ck.chunk", "ck.cv")
-                    .groupBy("chunk", "cv")
-                    .agg(F.count(F.lit(1)).alias("cnt")),
-                    shcp,
-                    batch,
+                    self._simhash_census_rows(sh, nbits), shcp, batch
                 )
             sh.unpersist()
 
@@ -2907,13 +2806,11 @@ class SignatureStore:
                 None, corpus, n=n, portable=portable,
                 num_hashes=num_hashes, seed=seed,
             )
-            want = (
-                _banded_keys(sig, num_hashes, 16)
-                .groupBy("band", "bh")
-                .agg(F.count(F.lit(1)).alias("_want"))
-            )
+            want = self._band_census_rows(
+                sig, num_hashes, 16
+            ).withColumnRenamed("cnt", "_want")
             bad_census = (
-                census.join(want, ["band", "bh"], "full")
+                census.join(want, list(_BAND_KEYS), "full")
                 .filter(
                     F.col("cnt").isNull()
                     | F.col("_want").isNull()

@@ -594,11 +594,37 @@ def start_incremental(
     def _run(batch_df: DataFrame, epoch_id: int) -> None:
         e2_micro_batch(batch_df, epoch_id, spark, warehouse_path, history_days)
 
-    writer = stream_df.writeStream.foreachBatch(_run).option(
+    return _start(stream_df, _run, checkpoint, trigger)
+
+
+def _start(stream_df: DataFrame, body, checkpoint: str, trigger: dict | None):
+    """The stream shell every ``start_*`` shares: ``foreachBatch(body)``
+    with its checkpoint, triggered by ``trigger`` (availableNow when
+    None: T2 drain-then-stop)."""
+    writer = stream_df.writeStream.foreachBatch(body).option(
         "checkpointLocation", checkpoint
     )
-    t = trigger or {"availableNow": True}
-    return writer.trigger(**t).start()
+    return writer.trigger(**(trigger or {"availableNow": True})).start()
+
+
+def _compact_due(compact_every: int | None, epoch_id: int) -> bool:
+    """True on the last epoch of every ``compact_every`` epochs."""
+    return bool(compact_every) and int(epoch_id) % compact_every == compact_every - 1
+
+
+def _publish_epoch(df: DataFrame, epoch_id: int, output_path: str) -> None:
+    """Publish an epoch's rows to the lake as its ``_epoch=<id>``
+    partition, replacing only that partition on a replay."""
+    (
+        df.withColumn("_epoch", F.lit(int(epoch_id)))
+        .write.mode("overwrite")
+        # dynamic pinned PER-WRITE: on a user-supplied session without
+        # session.py's default, static mode would wipe every previously
+        # published epoch from output_path on each overwrite
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("_epoch")
+        .parquet(output_path)
+    )
 
 
 def dedup_stream(
@@ -681,18 +707,9 @@ def incremental_dedup_micro_batch(
         threshold=threshold,
         commit_batch=name,
     )
-    (
-        survivors.withColumn("_epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        # dynamic pinned PER-WRITE: on a user-supplied session without
-        # session.py's default, static mode would wipe every previously
-        # published epoch from output_path on each overwrite
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_epoch")
-        .parquet(output_path)
-    )
+    _publish_epoch(survivors, epoch_id, output_path)
     survivors.unpersist()
-    if compact_every and int(epoch_id) % compact_every == compact_every - 1:
+    if _compact_due(compact_every, epoch_id):
         store.compact(corpus, exclude=name)
 
 
@@ -739,11 +756,7 @@ def start_incremental_dedup(
             compact_every=compact_every,
         )
 
-    writer = stream_df.writeStream.foreachBatch(_run).option(
-        "checkpointLocation", checkpoint
-    )
-    t = trigger or {"availableNow": True}
-    return writer.trigger(**t).start()
+    return _start(stream_df, _run, checkpoint, trigger)
 
 
 def ivf_append_micro_batch(
@@ -785,7 +798,7 @@ def ivf_append_micro_batch(
         id_col=id_col, vec_col=vec_col,
         n_centroids=n_centroids, iters=iters,
     )
-    if compact_every and int(epoch_id) % compact_every == compact_every - 1:
+    if _compact_due(compact_every, epoch_id):
         store.ivf_compact(
             corpus, n_centroids=n_centroids, iters=iters, exclude=name
         )
@@ -823,11 +836,7 @@ def start_ivf_append(
             compact_every=compact_every,
         )
 
-    writer = stream_df.writeStream.foreachBatch(_run).option(
-        "checkpointLocation", checkpoint
-    )
-    t = trigger or {"availableNow": True}
-    return writer.trigger(**t).start()
+    return _start(stream_df, _run, checkpoint, trigger)
 
 
 def corpus_ingest_micro_batch(
@@ -933,13 +942,7 @@ def corpus_ingest_micro_batch(
         ).transform(materialize)
     else:
         final = survivors
-    (
-        final.withColumn("_epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_epoch")
-        .parquet(output_path)
-    )
+    _publish_epoch(final, epoch_id, output_path)
     if semantic_threshold is not None:
         store.append_batch(final, corpus, name, id_col, text_col)
     vecs = batch_df.select(id_col, vec_col).join(
@@ -954,7 +957,7 @@ def corpus_ingest_micro_batch(
         final.unpersist()
         sem.unpersist()
     survivors.unpersist()
-    if compact_every and int(epoch_id) % compact_every == compact_every - 1:
+    if _compact_due(compact_every, epoch_id):
         store.compact(corpus, exclude=name)
         store.ivf_compact(
             corpus, n_centroids=n_centroids, iters=iters, exclude=name
@@ -1013,8 +1016,4 @@ def start_corpus_ingest(
             rescale_occupancy=rescale_occupancy,
         )
 
-    writer = stream_df.writeStream.foreachBatch(_run).option(
-        "checkpointLocation", checkpoint
-    )
-    t = trigger or {"availableNow": True}
-    return writer.trigger(**t).start()
+    return _start(stream_df, _run, checkpoint, trigger)

@@ -181,6 +181,19 @@ def test_append_searchable_excludable_compactable(
         store.ivf_append(new, "emb", "day1", n_centroids=8, iters=2)
 
 
+def test_ivf_append_refuses_reserved_batch_names(ivf_store, emb):
+    # the IVF side of test_signature_store's reserved-name loop: an
+    # epoch delta commits through the same _append_delta path, and a
+    # name that collides with the swap machinery's parking/staging
+    # dirs (or a path trick) must be refused before anything is written
+    new = emb.limit(2).withColumn("vec_id", F.col("vec_id") + 90000)
+    path = ivf_store.ivf_index_path("emb", n_centroids=8, iters=2)
+    for bad in ("x__old", "x__staging", "a/b", "_x", ".x"):
+        with pytest.raises(ValueError, match="invalid batch name"):
+            ivf_store.ivf_append(new, "emb", bad, n_centroids=8, iters=2)
+    assert not os.path.exists(ivf_store._delta_root(path))
+
+
 def test_streaming_ivf_append_end_to_end_with_replay(
     spark, emb, queries, tmp_path, ivf_store_dir
 ):

@@ -207,3 +207,60 @@ def test_no_risky_oracle_output_types(duck_oracle):
         "oracle output types that pandas-canonicalize away from the "
         f"Spark dtype (cast to BIGINT/DOUBLE/VARCHAR in the SQL): {offenders}"
     )
+
+
+def test_pricing_summary_sums_are_order_independent(spark, tmp_path):
+    # Three prices whose double sum misses the exact sum in the sixth
+    # decimal in EVERY summation order, so a double accumulator fails
+    # however Spark or DuckDB happen to order the rows. Accumulated in
+    # DECIMAL(38,6), the query and its oracle SQL both return the exact
+    # sum (and agree with each other, which the sf0.01 differential
+    # alone cannot show on data where the orders happen to agree).
+    import itertools
+    from decimal import Decimal
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    prices = [1226779812.18, 7686120831.36, 4462136543.24]
+    exact = float(sum(Decimal(repr(p)) for p in prices))
+    assert all(
+        round(sum(order), 6) != exact
+        for order in itertools.permutations(prices)
+    )
+    n = len(prices)
+    pq.write_table(
+        pa.table({
+            "l_orderkey": pa.array(range(1, n + 1), pa.int64()),
+            "l_partkey": pa.array([1] * n, pa.int64()),
+            "l_suppkey": pa.array([1] * n, pa.int64()),
+            "l_linenumber": pa.array([1] * n, pa.int32()),
+            "l_quantity": pa.array([1.0, 2.0, 3.0]),
+            "l_extendedprice": pa.array(prices),
+            "l_discount": pa.array([0.0] * n),
+            "l_tax": pa.array([0.0] * n),
+            "l_returnflag": pa.array(["A"] * n),
+            "l_linestatus": pa.array(["F"] * n),
+            "l_shipdate": pa.array(
+                [dt.datetime(1999, 1, 1)] * n, pa.timestamp("us")
+            ),
+        }),
+        str(tmp_path / "lineitem.parquet"),
+    )
+    spec = registry()["pricing_summary"]
+    (got,) = spec.fn(spark, str(tmp_path)).collect()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW lineitem AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'lineitem.parquet'}')"
+    )
+    res = con.sql(spec.oracle)
+    (want,) = [dict(zip(res.columns, r)) for r in res.fetchall()]
+    con.close()
+    for row in (got.asDict(), want):
+        assert row["sum_base_price"] == exact, row
+        assert row["sum_disc_price"] == exact, row
+        assert row["sum_charge"] == exact, row
+        assert row["sum_qty"] == 6.0 and row["count_order"] == n, row
+    assert got.asDict() == want

@@ -50,3 +50,9 @@ def test_every_timed_name_resolves():
     missing = {k: [n for n in v if n not in qs] for k, v in timed.items()}
     assert missing == {k: [] for k in timed}
     assert set(bench.HEADLINE) - set(registry()) == set(bench.BENCH_ONLY)
+
+
+def test_loc_counts_code_lines_only():
+    loc = _load(pathlib.Path(bench.REPO) / "tools" / "loc.py")
+    snippet = '"""Module docstring,\nover two lines."""\n\n# a comment\nx = 1\n\ny = x  # trailing comment\n'
+    assert loc.code_lines(snippet) == 2
