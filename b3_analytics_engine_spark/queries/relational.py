@@ -311,12 +311,12 @@ SELECT l_returnflag, l_linestatus,
                   AS DOUBLE), 6) AS sum_disc_price,
        round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax)
                            AS DECIMAL(38,6))) AS DOUBLE), 6) AS sum_charge,
-       round(CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) / count(*), 6)
-         AS avg_qty,
-       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) / count(*), 6)
-         AS avg_price,
-       round(CAST(sum(CAST(l_discount AS DECIMAL(38,6))) AS DOUBLE) / count(*), 6)
-         AS avg_disc,
+       floor(CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) / count(*)
+             * 1000000 + 0.5) / 1000000 AS avg_qty,
+       floor(CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) / count(*)
+             * 1000000 + 0.5) / 1000000 AS avg_price,
+       floor(CAST(sum(CAST(l_discount AS DECIMAL(38,6))) AS DOUBLE) / count(*)
+             * 1000000 + 0.5) / 1000000 AS avg_disc,
        count(*) AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '2001-09-02 00:00:00'
@@ -328,7 +328,10 @@ GROUP BY l_returnflag, l_linestatus
     "benchmark query. Sums accumulate in DECIMAL(38,6), as TPC-H "
     "specifies and as `regional_revenue` does: each per-row double is "
     "cast to decimal, so the sum (and each average, the decimal sum "
-    "as a double over count(*)) does not depend on summation order.",
+    "as a double over count(*)) does not depend on summation order. "
+    "The averages are free quotients, so they round via the portable "
+    "half-up floor(q*1e6 + 0.5)/1e6 of `tumbling_window_agg`, not "
+    "round(), where Spark and DuckDB disagree at 7th-decimal ties.",
 )
 def pricing_summary_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -337,6 +340,9 @@ def pricing_summary_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def dsum(c):
         return F.sum(c.cast("decimal(38,6)")).cast("double")
+
+    def davg(c):
+        return F.floor(dsum(c) / n * 1000000 + F.lit(0.5)) / 1000000
 
     return (
         li.filter(
@@ -348,9 +354,9 @@ def pricing_summary_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(dsum(F.col("l_extendedprice")), 6).alias("sum_base_price"),
             F.round(dsum(disc_price), 6).alias("sum_disc_price"),
             F.round(dsum(disc_price * (1 + F.col("l_tax"))), 6).alias("sum_charge"),
-            F.round(dsum(F.col("l_quantity")) / n, 6).alias("avg_qty"),
-            F.round(dsum(F.col("l_extendedprice")) / n, 6).alias("avg_price"),
-            F.round(dsum(F.col("l_discount")) / n, 6).alias("avg_disc"),
+            davg(F.col("l_quantity")).alias("avg_qty"),
+            davg(F.col("l_extendedprice")).alias("avg_price"),
+            davg(F.col("l_discount")).alias("avg_disc"),
             n.alias("count_order"),
         )
     )

@@ -1205,8 +1205,15 @@ class SignatureStore:
                        refresh=True)
         # censuses from the just-refreshed signatures bases
         for cn, cp, ck, cs, cb in sorted(census5):
-            self.band_census(df, corpus, id_col, text_col, cn, bool(cp),
-                             ck, cs, cb, refresh=True)
+            self._write_atomic(
+                self._band_census_rows(
+                    self.spark.read.parquet(
+                        self.signatures_path(corpus, cn, bool(cp), ck, cs)
+                    ),
+                    ck, cb,
+                ),
+                self.band_census_path(corpus, cn, bool(cp), ck, cs, cb),
+            )
         # simhash is token-level (its own derivation root): an existing
         # base left un-refreshed would silently keep the OLD corpus
         # view while every shingle-derived artifact moved on — exactly
@@ -1891,8 +1898,9 @@ class SignatureStore:
         ``ivf_index(refresh=True)`` retrains). Same ``__delta/<batch>``
         mechanics as the MinHash artifacts: atomic, idempotent on
         re-commit, folded-name refusal, ``exclude_batch``-hideable."""
-        # both name checks run before any recovery or centroid read;
-        # the commit itself (_append_delta) repeats them
+        # the name check runs before any recovery, the folded check
+        # before the centroid read; the commit itself (_append_delta)
+        # repeats both
         self._validate_batch_name(batch)
         path = self.ivf_index_path(corpus, n_centroids, iters)
         self._recover_if_parked(path, corpus)

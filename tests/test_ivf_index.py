@@ -182,15 +182,19 @@ def test_append_searchable_excludable_compactable(
 
 
 def test_ivf_append_refuses_reserved_batch_names(ivf_store, emb):
-    # the IVF side of test_signature_store's reserved-name loop: an
-    # epoch delta commits through the same _append_delta path, and a
-    # name that collides with the swap machinery's parking/staging
-    # dirs (or a path trick) must be refused before anything is written
+    # the IVF side of test_signature_store's reserved-name loop: a name
+    # that collides with the swap machinery's parking/staging dirs (or
+    # a path trick) must be refused before anything is written, both by
+    # ivf_append's own up-front check and by the cell-partitioned
+    # _append_delta commit it shares with the retrain/rescale re-assign
     new = emb.limit(2).withColumn("vec_id", F.col("vec_id") + 90000)
     path = ivf_store.ivf_index_path("emb", n_centroids=8, iters=2)
+    rows = ivf_store.ivf_index(emb, "emb", n_centroids=8, iters=2)
     for bad in ("x__old", "x__staging", "a/b", "_x", ".x"):
         with pytest.raises(ValueError, match="invalid batch name"):
             ivf_store.ivf_append(new, "emb", bad, n_centroids=8, iters=2)
+        with pytest.raises(ValueError, match="invalid batch name"):
+            ivf_store._append_delta(rows, path, bad, partition_by="cell")
     assert not os.path.exists(ivf_store._delta_root(path))
 
 
