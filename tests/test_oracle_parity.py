@@ -212,10 +212,11 @@ def test_no_risky_oracle_output_types(duck_oracle):
 def test_pricing_summary_sums_are_order_independent(spark, tmp_path):
     # Three prices whose double sum misses the exact sum in the sixth
     # decimal in EVERY summation order, so a double accumulator fails
-    # however Spark or DuckDB happen to order the rows. Accumulated in
-    # DECIMAL(38,6), the query and its oracle SQL both return the exact
-    # sum (and agree with each other, which the sf0.01 differential
-    # alone cannot show on data where the orders happen to agree).
+    # however Spark or DuckDB happen to order the rows. Summed exactly
+    # (as whole millionths in a BIGINT), the query and its oracle SQL
+    # both return the exact sum (and agree with each other, which the
+    # sf0.01 differential alone cannot show on data where the orders
+    # happen to agree).
     import itertools
     from decimal import Decimal
 
